@@ -96,6 +96,7 @@ def write_tables(out_dir: str, seed: int, sf: float = 0.1) -> dict[str, int]:
     n_li, n_ev = int(6_000_000 * sf), int(1_000_000 * sf)
     n_docs, n_emb = int(50_000 * sf), int(20_000 * sf)
     i32 = pa.int32()
+    slots = rng.permutation(n_ord * 7)[:n_li]
     tables = {
         "region": {
             "r_regionkey": pa.array(range(5), i32),
@@ -141,10 +142,13 @@ def write_tables(out_dir: str, seed: int, sf: float = 0.1) -> dict[str, int]:
             "o_orderpriority": rng.choice(PRIORITIES, n_ord),
         },
         "lineitem": {
-            "l_orderkey": rng.integers(0, n_ord, n_li),
+            # (l_orderkey, l_linenumber) unique, as TPC-H's primary key:
+            # queries order on it and cut with LIMIT (q41), which is only
+            # deterministic on a unique key
+            "l_orderkey": slots // 7,
             "l_partkey": rng.integers(0, n_part, n_li),
             "l_suppkey": rng.integers(0, n_supp, n_li),
-            "l_linenumber": pa.array(rng.integers(1, 8, n_li), i32),
+            "l_linenumber": pa.array(slots % 7 + 1, i32),
             "l_quantity": rng.integers(1, 51, n_li).astype("float64"),
             "l_extendedprice": _money(rng, 900, 105_000, n_li),
             "l_discount": np.round(rng.integers(0, 11, n_li) * 0.01, 2),
