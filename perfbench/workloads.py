@@ -53,18 +53,20 @@ def _with_phases(tracer, df):
 
 
 class Headline:
-    """Every fourth of the 62 ``bench.py`` HEADLINE queries, in the
-    HEADLINE order, each built and run to the noop sink twice in a row.
-    A pass of these 16 queries takes ~8 s; compiling all 62 once costs
-    ~40 s per process. Tables are generated at sf0.01 (60k lineitem
-    rows): the DuckDB oracles of the dedup queries grow quadratically
-    and take 92 s at sf0.1 against 6 s here, while the Spark side is
-    overhead bound at both sizes."""
+    """Every fourth of the 62 ``bench.py`` HEADLINE queries plus the
+    kNN eval head (q45, ``knn_classify``), in the HEADLINE order; a pass
+    runs each query once, built and run to the noop sink. A pass of
+    these 17 queries takes ~4 s; compiling all 62 once costs ~40 s per
+    process. Tables are generated at sf0.01 (60k lineitem rows): the
+    DuckDB oracles of the dedup queries grow quadratically and take
+    92 s at sf0.1 against 6 s here, while the Spark side is overhead
+    bound at both sizes."""
 
     name = "headline"
     SF = 0.01
     STRIDE = 4
-    REPEAT = 2
+    # the Presto eval head, so the kNN operators are traced here too
+    EXTRA = ("q45_knn_classify",)
 
     def __init__(self, work: str) -> None:
         from bench import HEADLINE
@@ -72,7 +74,11 @@ class Headline:
 
         self.dir = os.path.join(work, "inputs")
         self.queries = QUERIES
-        self.order = list(HEADLINE)[:: self.STRIDE]
+        self.order = [
+            q
+            for i, q in enumerate(HEADLINE)
+            if i % self.STRIDE == 0 or q in self.EXTRA
+        ]
         self.results: dict[str, tuple] = {}
 
     def setup(self, spark, seed: int) -> dict:
@@ -84,8 +90,7 @@ class Headline:
         return {"rows": rows}
 
     def passes(self):
-        # each query twice in a row: two timed samples per compile
-        return itertools.repeat([q for q in self.order for _ in range(self.REPEAT)])
+        return itertools.repeat(self.order)
 
     def warm_key(self, key: str) -> str:
         return key
@@ -153,12 +158,14 @@ class CorpusDedup:
     """``CorpusPipeline`` normalize -> quality_gate -> lang_filter ->
     exact_dedup -> near_dedup(minhash, 0.8) over corpora in the shape
     of ``tools/stress_bench.gen_documents``, survivors written to
-    parquet. Each op reads a different corpus of the pool."""
+    parquet. Each op reads the next corpus of the pool. At 1,000 docs
+    the op is bound by the ~31 eager jobs of ``run()`` (~2 s warm), so
+    the timed window holds several ops; 2,000 docs took ~4 s an op."""
 
     name = "corpus_dedup"
-    N_DOCS = 2000
+    N_DOCS = 1000
     POOL = 3
-    WARM_OPS = 2
+    WARM_OPS = 6
     MIN_TOKENS = 35
     KEEP = ("en", "fr", "de", "es")
     THRESHOLD = 0.8
@@ -200,7 +207,9 @@ class CorpusDedup:
         mps_io.write_partitioned(clean, path, ("lang",))
 
     def warm(self, spark, key: int) -> None:
-        # the op after the compiling one is still ~20% slow (JIT)
+        # op times keep falling for ~10 ops after the compiling one
+        # (4 s -> 2.4 s on 4 cores, JIT); six untimed ops cut the
+        # slope the timed ops see, and the run budget allows no more
         for i in range(self.WARM_OPS):
             self._run(spark, (key + i) % self.POOL, os.path.join(self.out, f"warm{i}"))
 
