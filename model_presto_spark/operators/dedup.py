@@ -131,11 +131,11 @@ def minhash_lsh_pairs(
     exact Jaccard over shingle sets.
 
     ``signature_screen="auto"`` (the default) makes the scale-safe
-    screened path the DEFAULT at corpus scale: one ``df.count()``
-    probe job decides — corpora of ``auto_min_docs`` or more get
-    ``screen = max(0, threshold - 0.25)`` (a 16-hash estimate screen
-    at that margin false-rejects ~0.3% of true J=0.8 pairs; see
-    below), smaller corpora keep the exact unscreened candidate
+    screened path the DEFAULT at corpus scale: one count job over the
+    persisted hash-set table decides — corpora of ``auto_min_docs``
+    or more get ``screen = max(0, threshold - 0.25)`` (a 16-hash
+    estimate screen at that margin false-rejects ~0.3% of true J=0.8
+    pairs; see below), smaller corpora keep the exact unscreened candidate
     semantics, where the random band-collision flood is affordable.
     Rationale: the flood grows with n² (measured s10→s30 stress
     exponent 1.401 unscreened vs 0.744 screened, recall 0.999), so a
@@ -188,33 +188,11 @@ def minhash_lsh_pairs(
     mega-bucket is intentionally partial — the pairs contract is
     preserved exactly for every bucket under the cap.
     """
-    if isinstance(signature_screen, str):
-        if signature_screen != "auto":
-            raise ValueError(
-                f"signature_screen must be 'auto', None, or a float: "
-                f"{signature_screen!r}"
-            )
-        # ``approx_docs`` (caller-supplied size hint, e.g. from a
-        # pipeline that already counted) skips the probe job entirely;
-        # otherwise one cheap count-only job — no text materialization,
-        # and at corpus scale its cost is noise next to the n²
-        # candidate flood it prevents. Note the probe re-runs the
-        # upstream lineage; pass the hint (or persist upstream) when
-        # ``df`` is an expensive derived relation.
-        n_docs = approx_docs if approx_docs is not None else df.count()
-        if n_docs >= auto_min_docs:
-            signature_screen = max(0.0, threshold - 0.25)
-            _LOG.info(
-                "minhash_lsh_pairs: auto routed %d docs to the "
-                "screened candidate path (screen=%.2f; ~0.3%% "
-                "false-negative screen on near-threshold+0.3 pairs "
-                "at 16 hashes). Pass signature_screen=None to pin "
-                "exact candidate semantics.",
-                n_docs,
-                signature_screen,
-            )
-        else:
-            signature_screen = None
+    if isinstance(signature_screen, str) and signature_screen != "auto":
+        raise ValueError(
+            f"signature_screen must be 'auto', None, or a float: "
+            f"{signature_screen!r}"
+        )
     rows_per_band = num_hashes // bands
     # Spread rows first: shingling + hashing are CPU-bound and must
     # not inherit a small scan's partitioning (io.spread docstring).
@@ -248,6 +226,28 @@ def minhash_lsh_pairs(
         from pyspark import StorageLevel
 
         sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    if signature_screen == "auto":
+        # ``approx_docs`` (caller-supplied size hint, e.g. from a
+        # pipeline that already counted) skips the probe job entirely.
+        # Otherwise the probe counts the hash-set table just built: it
+        # has one row per doc, and with ``reuse`` the count is the job
+        # that fills the cache the signature and verify branches read
+        # anyway, so the upstream lineage runs once, not once for the
+        # probe and again for the hash sets.
+        n_docs = approx_docs if approx_docs is not None else sh.count()
+        if n_docs >= auto_min_docs:
+            signature_screen = max(0.0, threshold - 0.25)
+            _LOG.info(
+                "minhash_lsh_pairs: auto routed %d docs to the "
+                "screened candidate path (screen=%.2f; ~0.3%% "
+                "false-negative screen on near-threshold+0.3 pairs "
+                "at 16 hashes). Pass signature_screen=None to pin "
+                "exact candidate semantics.",
+                n_docs,
+                signature_screen,
+            )
+        else:
+            signature_screen = None
     # The 16 seed-minima fold in one pass over the hash array.
     sig = sh.selectExpr(
         "id", f"{minhash_signature_sql('hs', num_hashes)} AS sig"

@@ -18,12 +18,58 @@ is a join + groupBy (no vertex-centric framework needed). The driver
 loop checks a one-row convergence aggregate per round — scalar only,
 never the data. Iterations localCheckpoint to truncate lineage, the
 standard guard against plan blowup in iterative Spark.
+
+Small graphs never enter that loop. A distributed round is not one
+job: under AQE it launches 11–12 (a stage plus broadcasts per join),
+and the seed probe adds two more, which on a corpus-dedup edge list of
+a few hundred pairs is most of the operator's time even when the first
+labels are already the fixpoint. So when the checkpointed edge list
+holds at most ``CAP`` edges, it is collected (one job over the cached
+blocks) and finished by union-find on the driver; ``max_iter`` and
+``jump_squarings`` only apply above ``CAP``.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+# Largest edge list ``connected_components`` finishes on the driver.
+# Measured on a 4-core host (local[4]), driver union-find vs the
+# distributed rounds, edge checkpoint included, best of 3 on
+# dedup-shaped graphs (clusters of 5 ids): 1k edges 0.33 vs 3.32 s,
+# 10k 0.40 vs 3.05 s, 100k 1.33 vs 5.16 s, 300k 3.51 vs 8.16 s. The
+# driver still wins at 300k, but its pass is single-threaded and its
+# result is broadcast, so the cap stays where the win is 4x.
+CAP = 100_000
+
+# Id types whose Python ordering is Spark's ordering (UTF-8 byte order
+# is code-point order). Floating ids (NaN, -0.0), collated strings and
+# the rest stay on the distributed path.
+_DRIVER_ID_TYPES = ("tinyint", "smallint", "int", "bigint", "string")
+
+
+def _min_root_components(pairs, nodes=()) -> dict:
+    """Union-find over ``pairs`` (plus isolated ``nodes``): node -> the
+    min node of its component."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+        if ra != rb:
+            # union by min keeps the root = min reachable node
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
 
 
 def connected_components(
@@ -45,6 +91,10 @@ def connected_components(
     volume per round for fewer rounds; 2 is the sweet spot when round
     scheduling overhead dominates (small/medium graphs), 1 recovers
     the classic one-jump iteration for very large label tables.
+
+    Edge lists of at most ``CAP`` edges (integer or string ids) are
+    finished on the driver by union-find instead, with the same
+    result; ``max_iter`` and ``jump_squarings`` only apply above it.
     """
     # Materialize the directed edge list BEFORE symmetrizing: the
     # union below references ``edges`` twice, and Spark has no
@@ -58,6 +108,26 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
         .localCheckpoint(eager=True)
     )
+    id_type = edges.schema["u"].dataType
+    if id_type.simpleString() in _DRIVER_ID_TYPES:
+        # one job over the checkpointed blocks; a distributed round
+        # would cost 11-12 (module docstring)
+        rows = edges.limit(CAP + 1).collect()
+        if len(rows) <= CAP:
+            comp = _min_root_components(rows)
+            # Arrow, not a row list: a list becomes a Python RDD whose
+            # scan starts Python workers in every consuming job. At
+            # most 2 * CAP rows; the hint stands in for the size
+            # statistics a driver-built relation lacks, so callers'
+            # joins broadcast it instead of shuffling both sides.
+            return F.broadcast(
+                edges.sparkSession.createDataFrame(
+                    pa.table({"id": list(comp), "comp": list(comp.values())}),
+                    StructType(
+                        [StructField("id", id_type), StructField("comp", id_type)]
+                    ),
+                )
+            )
     # undirected: keep both directions for neighborhood scans.
     # (single distinct AFTER the symmetric union covers both the
     # duplicate-input and both-directions-present cases in one shuffle)
@@ -162,9 +232,10 @@ def connected_components(
                 "comp",
             ).select("id", F.col("comp2").alias("comp"))
         # lazy checkpoint + the convergence probe as the materializing
-        # action: one job per round (eager checkpoint + separate probe
-        # was two). The probe reads the checkpointed partitions, so the
-        # next round's joins re-read cached rows, not lineage.
+        # action: one action per round (eager checkpoint + separate
+        # probe was two), which AQE still runs as 11-12 jobs. The probe
+        # reads the checkpointed partitions, so the next round's joins
+        # re-read cached rows, not lineage.
         new_labels = (
             labels.unionByName(prop)
             .unionByName(jump)
@@ -738,31 +809,13 @@ def grid_density_clusters(
     )
     dense = sorted(r.cell_id for r in ids.collect())  # <= grid_w^2 rows
     dense_set = set(dense)
-    parent = {cid: cid for cid in dense}
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(a: int, b: int) -> None:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # union by min keeps the label = min reachable cell id
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-
+    adjacent = []
     for cid in dense:
-        c = cid % grid_w
-        r = cid // grid_w
-        if c < grid_w - 1 and (cid + 1) in dense_set:
-            union(cid, cid + 1)
-        if r < grid_w - 1 and (cid + grid_w) in dense_set:
-            union(cid, cid + grid_w)
-
-    spark = cells.sparkSession
-    mapping = spark.createDataFrame(
-        [(cid, find(cid)) for cid in dense], "cell_id long, cluster long"
+        if cid % grid_w < grid_w - 1 and cid + 1 in dense_set:
+            adjacent.append((cid, cid + 1))
+        if cid // grid_w < grid_w - 1 and cid + grid_w in dense_set:
+            adjacent.append((cid, cid + grid_w))
+    comp = _min_root_components(adjacent, dense)
+    return cells.sparkSession.createDataFrame(
+        list(comp.items()), "cell_id long, cluster long"
     )
-    return mapping

@@ -263,6 +263,12 @@ def knn_classify(
     Returns (probe_id, predicted, votes). Deterministic tie-break:
     highest vote count, then smallest label.
     """
+    if cand_id == probe_id:
+        # knn_join names its two id columns after probe_id and
+        # cand_id; equal names would make every later reference
+        # ambiguous, so the candidate side gets a private one
+        cand_id = "__knn_cand_id"
+        candidates = candidates.withColumnRenamed(probe_id, cand_id)
     nn = knn_join(
         probes,
         candidates,

@@ -141,13 +141,8 @@ _Q210_ORACLE = f"""
     SELECT variant, CAST(COUNT(*) AS BIGINT) AS n_users,
            {_R6.format(x='AVG(y)')} AS mean_y,
            {_R6.format(x='AVG(y_adj)')} AS mean_y_adj,
-           {_R6.format(
-               x='(SUM(y * y) - COUNT(*) * AVG(y) * AVG(y)) / (COUNT(*) - 1)')}
-             AS var_y,
-           {_R6.format(
-               x='(SUM(y_adj * y_adj) - COUNT(*) * AVG(y_adj) * AVG(y_adj)) '
-                 '/ (COUNT(*) - 1)')}
-             AS var_y_adj
+           {_R6.format(x='VAR_SAMP(y)')} AS var_y,
+           {_R6.format(x='VAR_SAMP(y_adj)')} AS var_y_adj
     FROM adj GROUP BY variant ORDER BY variant
 """
 
@@ -206,17 +201,17 @@ def q210(spark: SparkSession, sf_dir: str) -> DataFrame:
             "y_adj"
         ),
     )
-    var_of = lambda c: (
-        F.sum(F.col(c) * F.col(c)) - n * F.avg(c) * F.avg(c)
-    ) / (n - 1)
+    # var_samp, not the one-pass SUM(y*y) - n*avg^2: that difference
+    # cancels ~11 digits, so its 6th decimal followed the summation
+    # order, i.e. the partitioning (results moved with core count)
     return (
         adj.groupBy("variant")
         .agg(
             n.cast("bigint").alias("n_users"),
             r6(F.avg("y")).alias("mean_y"),
             r6(F.avg("y_adj")).alias("mean_y_adj"),
-            r6(var_of("y")).alias("var_y"),
-            r6(var_of("y_adj")).alias("var_y_adj"),
+            r6(F.var_samp("y")).alias("var_y"),
+            r6(F.var_samp("y_adj")).alias("var_y_adj"),
         )
         .orderBy("variant")
     )

@@ -33,6 +33,8 @@ _FAST_GATE_FILES = {
     "test_asof_sql.py",
     "test_knn_sql.py",
     "test_text_sql.py",
+    "test_dedup_graph.py",
+    "test_config_invariance.py",
 }
 
 

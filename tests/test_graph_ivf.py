@@ -1,44 +1,11 @@
-"""Connected-components dedup clustering and IVF ANN tests."""
+"""Graph operator and IVF ANN tests; connected components are in
+test_dedup_graph.py."""
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import Row
 from pyspark.sql import functions as F
-
-
-def test_connected_components_chain_and_clique(spark):
-    from model_presto_spark.operators.graph import connected_components
-
-    # chain 1-2-3-4 (transitive), clique 10-11-12, isolated pair 20-21
-    pairs = spark.createDataFrame(
-        [
-            (1, 2), (2, 3), (3, 4),
-            (10, 11), (11, 12), (10, 12),
-            (20, 21),
-        ],
-        "id_a long, id_b long",
-    )
-    comp = {r.id: r.comp for r in connected_components(pairs).collect()}
-    assert comp[1] == comp[2] == comp[3] == comp[4] == 1
-    assert comp[10] == comp[11] == comp[12] == 10
-    assert comp[20] == comp[21] == 20
-
-
-def test_keep_cluster_representatives(spark):
-    from model_presto_spark.operators.graph import keep_cluster_representatives
-
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text=f"d{i}") for i in [1, 2, 3, 4, 20, 21, 99]]
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (20, 21)], "id_a long, id_b long"
-    )
-    kept = sorted(
-        r.doc_id for r in keep_cluster_representatives(docs, pairs, "doc_id").collect()
-    )
-    # chain collapses to 1, pair to 20, singleton 99 survives
-    assert kept == [1, 20, 99]
 
 
 def test_ivf_knn_recall_against_exact(spark):
@@ -73,22 +40,6 @@ def test_ivf_knn_recall_against_exact(spark):
     ad = {(r.pid, r.cid): r.dist for r in approx.collect()}
     for key in e & a:
         assert abs(ed[key] - ad[key]) < 1e-12
-
-
-def test_connected_components_long_chain_converges(spark):
-    """Regression: a path graph far longer than max_iter must still fully
-    close — pointer jumping gives O(log diameter) rounds, so a 200-node
-    chain needs ~8 rounds, not 200 (plain neighbor propagation would
-    silently split the chain at the iteration cap)."""
-    from model_presto_spark.operators.graph import connected_components
-
-    n = 200
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
-    )
-    comp = {r.id: r.comp for r in connected_components(pairs, max_iter=12).collect()}
-    assert len(comp) == n
-    assert set(comp.values()) == {0}
 
 
 def _vec_df(spark, n, dim=8, seed=3, with_dup=True):

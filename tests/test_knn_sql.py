@@ -126,3 +126,25 @@ def test_ann_lsh_join_matches_reference(spark, vecs):
     g = {key(r): (r.cid, r.cosine_sim) for r in got.collect()}
     x = {key(r): (r.cid, r.cosine_sim) for r in want.collect()}
     assert g == x
+
+
+@pytest.mark.parametrize("exclude_self", [False, True])
+def test_knn_classify_equal_id_names(spark, vecs, exclude_self):
+    """Probe and candidate id columns may share a name: predictions
+    equal the distinct-name call's (the shared name used to raise
+    AMBIGUOUS_REFERENCE)."""
+    from model_presto_spark.operators.knn import knn_classify
+
+    labelled = vecs.selectExpr("id", "vec", "id % 3 AS y")
+    probes = vecs.where("id < 8")
+    distinct = knn_classify(
+        probes.toDF("pid", "vec"), labelled.toDF("cid", "vec", "y"),
+        "pid", "cid", "y", k=4, exclude_self=exclude_self,
+    )
+    same = knn_classify(
+        probes, labelled, "id", "id", "y", k=4, exclude_self=exclude_self
+    )
+    assert same.columns == ["id", "predicted", "votes"]
+    assert sorted(map(tuple, same.collect())) == sorted(
+        map(tuple, distinct.collect())
+    )
