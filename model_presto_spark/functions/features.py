@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from model_presto_spark.functions.text import h60, tokens
+from model_presto_spark.functions.text import h60, sql_str, tokens
 
 
 def hashed_features(
@@ -32,14 +32,14 @@ def hashed_features(
     """Signed hashed bag-of-words: (id, bucket, weight) rows, zero
     weights dropped. One explode + one groupBy(id, bucket) — the
     only shuffle is on the output key, token strings never move."""
-    tok = F.explode_outer(tokens(F.col(text_col))).alias("__tok")
+    tok = F.explode_outer(F.expr(tokens(f"`{text_col}`"))).alias("__tok")
     exploded = df.select(F.col(id_col), tok)
     bucket = F.pmod(
-        h60(F.concat(F.lit(salt + "#"), F.col("__tok"))), F.lit(dim)
+        F.expr(h60(f"concat({sql_str(salt + '#')}, __tok)")), F.lit(dim)
     ).cast("int")
     sign = F.when(
         F.pmod(
-            h60(F.concat(F.lit(salt + "s#"), F.col("__tok"))), F.lit(2)
+            F.expr(h60(f"concat({sql_str(salt + 's#')}, __tok)")), F.lit(2)
         )
         == 0,
         F.lit(1),

@@ -17,7 +17,9 @@ of expression whole-stage codegen eats. The Krüger series covers the
 general-CRS need (any UTM zone / custom central meridian at
 sub-millimetre accuracy); a pyproj UDF for exotic non-TM CRSs is
 deliberately NOT provided: keep the relational core pure, decode at
-the edges.
+the edges. The forward series (``transverse_mercator``,
+``utm_forward``) is built as SQL text for ``F.expr``; the other
+helpers take and return Columns.
 """
 
 from __future__ import annotations
@@ -62,14 +64,6 @@ UTM_FALSE_EASTING = 500_000.0
 UTM_FALSE_NORTHING_SOUTH = 10_000_000.0
 
 
-def _atanh(x: Column) -> Column:
-    return F.log((1.0 + x) / (1.0 - x)) / 2.0
-
-
-def _asinh(x: Column) -> Column:
-    return F.log(x + F.sqrt(x * x + 1.0))
-
-
 def latlon_to_unit_sphere(lat: Column, lon: Column) -> Column:
     """(lat, lon) degrees -> [x, y, z] on the unit sphere
     (presto.py:299-309 cartesian encoding)."""
@@ -107,82 +101,19 @@ def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Colum
     return 2.0 * F.lit(WGS84_RADIUS_M) * F.asin(F.sqrt(a))
 
 
-def transverse_mercator(
-    lat: Column,
-    lon: Column,
-    lon0_deg: Column,
-    k0: float = UTM_K0,
-    false_easting: float = UTM_FALSE_EASTING,
-    false_northing: float = 0.0,
-) -> Column:
-    """Ellipsoidal transverse Mercator forward projection as a
-    struct(easting, northing) — general F22 path (the reference
-    reprojects to arbitrary UTM/TM CRSs through pyproj,
-    src/common.py:32-49, treesat_eval.py:115-117; here it is the
-    closed-form Krüger series in pure column arithmetic, ~1e-9 m vs
-    the exact projection, valid within the usual |dlon| <= ~30°).
-    """
-    phi = F.radians(lat)
-    lam = F.radians(lon - lon0_deg)
-    sphi = F.sin(phi)
-    t = F.sinh(_atanh(sphi) - _E * _atanh(F.lit(_E) * sphi))
-    xi_p = F.atan2(t, F.cos(lam))
-    eta_p = _asinh(F.sin(lam) / F.sqrt(t * t + F.cos(lam) * F.cos(lam)))
-    xi = xi_p
-    eta = eta_p
-    for j, a in enumerate(_ALPHA, start=1):
-        xi = xi + F.lit(a) * F.sin(2.0 * j * xi_p) * F.cosh(2.0 * j * eta_p)
-        eta = eta + F.lit(a) * F.cos(2.0 * j * xi_p) * F.sinh(2.0 * j * eta_p)
-    easting = F.lit(false_easting) + F.lit(k0 * _A_BAR) * eta
-    northing = F.lit(false_northing) + F.lit(k0 * _A_BAR) * xi
-    return F.struct(easting.alias("easting"), northing.alias("northing"))
-
-
-def utm_zone(lon: Column) -> Column:
-    """Standard UTM zone number (1..60) for a longitude."""
-    return (F.floor((lon + 180.0) / 6.0) % 60 + 1).cast("int")
-
-
-def utm_forward(lat: Column, lon: Column) -> Column:
-    """(lat, lon) -> struct(zone, northern, easting, northing) in the
-    point's own UTM zone (southern hemisphere gets the 10,000 km false
-    northing, the EPSG:327xx convention)."""
-    zone = utm_zone(lon)
-    lon0 = (zone.cast("double") * 6.0) - 183.0
-    en = transverse_mercator(lat, lon, lon0)
-    northern = lat >= 0.0
-    northing = F.when(northern, en["northing"]).otherwise(
-        en["northing"] + UTM_FALSE_NORTHING_SOUTH
-    )
-    return F.struct(
-        zone.alias("zone"),
-        northern.alias("northern"),
-        en["easting"].alias("easting"),
-        northing.alias("northing"),
-    )
-
-
-def utm_forward_sql(lat: str, lon: str) -> str:
-    """``utm_forward`` as ONE generated SQL string for ``F.expr``.
-
-    Why this twin exists: building the Krüger series through the
-    Column API costs ~1,459 py4j round-trips (~0.4 ms apiece — ~0.6 s
-    of driver time per plan build, measured on q56); the identical
-    expression as a SQL string is one round-trip plus a JVM-side
-    parse.  Every operation and operand order mirrors
-    ``transverse_mercator``/``utm_forward`` exactly (literals rendered
-    with ``repr`` and a ``D`` suffix so nothing parses as DECIMAL), so
-    the computed doubles are bit-identical — pinned by
-    tests/test_utm.py::test_utm_forward_sql_bit_identical.  The SQL is
-    textually large (subexpressions inline where the Column tree
-    shares node instances), but Catalyst analysis walks the shared
-    Column DAG per path anyway — the analyzed cost is the same shape.
-    ``lat``/``lon`` are SQL fragments (column names or expressions).
-    """
-    zone = f"CAST(FLOOR((({lon}) + 180.0D) / 6.0D) % 60 + 1 AS INT)"
-    lon0 = f"(CAST({zone} AS DOUBLE) * 6.0D - 183.0D)"
+def _tm_series(
+    lat: str,
+    lon: str,
+    lon0: str,
+    k0: float,
+    false_easting: float,
+    false_northing: float,
+) -> tuple[str, str]:
+    """(easting, northing) SQL fragments of the Krüger forward series.
+    Literals are rendered with ``repr`` and a ``D`` suffix so nothing
+    parses as DECIMAL."""
     phi = f"radians({lat})"
-    lam = f"radians(({lon}) - {lon0})"
+    lam = f"radians(({lon}) - ({lon0}))"
     sphi = f"sin({phi})"
     e = f"{_E!r}D"
     atanh_sphi = f"(ln((1.0D + {sphi}) / (1.0D - {sphi})) / 2.0D)"
@@ -198,9 +129,49 @@ def utm_forward_sql(lat: str, lon: str) -> str:
         c = repr(2.0 * j)
         xi = f"({xi} + {a!r}D * sin({c}D * {xi_p}) * cosh({c}D * {eta_p}))"
         eta = f"({eta} + {a!r}D * cos({c}D * {xi_p}) * sinh({c}D * {eta_p}))"
-    scale = f"{UTM_K0 * _A_BAR!r}D"
-    easting = f"({UTM_FALSE_EASTING!r}D + {scale} * {eta})"
-    northing0 = f"(0.0D + {scale} * {xi})"
+    scale = f"{k0 * _A_BAR!r}D"
+    return (
+        f"({false_easting!r}D + {scale} * {eta})",
+        f"({false_northing!r}D + {scale} * {xi})",
+    )
+
+
+def transverse_mercator(
+    lat: str,
+    lon: str,
+    lon0_deg: str,
+    k0: float = UTM_K0,
+    false_easting: float = UTM_FALSE_EASTING,
+    false_northing: float = 0.0,
+) -> str:
+    """Ellipsoidal transverse Mercator forward projection as a
+    struct(easting, northing) — general F22 path (the reference
+    reprojects to arbitrary UTM/TM CRSs through pyproj,
+    src/common.py:32-49, treesat_eval.py:115-117; here it is the
+    closed-form Krüger series in pure column arithmetic, ~1e-9 m vs
+    the exact projection, valid within the usual |dlon| <= ~30°).
+
+    Arguments are SQL fragments (column names or expressions); the
+    result is SQL text for ``F.expr``: one py4j round-trip plus a JVM
+    parse, where building the series from Column objects cost ~1,459
+    round-trips (~0.6 s of driver time per q56 build).
+    """
+    easting, northing = _tm_series(
+        lat, lon, lon0_deg, k0, false_easting, false_northing
+    )
+    return f"named_struct('easting', {easting}, 'northing', {northing})"
+
+
+def utm_forward(lat: str, lon: str) -> str:
+    """(lat, lon) -> struct(zone, northern, easting, northing) in the
+    point's own UTM zone (southern hemisphere gets the 10,000 km false
+    northing, the EPSG:327xx convention). SQL fragments in, SQL text
+    out, like ``transverse_mercator``."""
+    zone = f"CAST(FLOOR((({lon}) + 180.0D) / 6.0D) % 60 + 1 AS INT)"
+    lon0 = f"CAST({zone} AS DOUBLE) * 6.0D - 183.0D"
+    easting, northing0 = _tm_series(
+        lat, lon, lon0, UTM_K0, UTM_FALSE_EASTING, 0.0
+    )
     northern = f"(({lat}) >= 0.0D)"
     northing = (
         f"(CASE WHEN {northern} THEN {northing0} "

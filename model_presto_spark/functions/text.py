@@ -1,4 +1,4 @@
-"""Text-analysis column functions for large-scale corpus pipelines.
+"""Text-analysis expression builders for large-scale corpus pipelines.
 
 Everything here is a pure Spark SQL *expression builder* — shingling,
 MinHash, SimHash, token stats, language ID, fingerprints all compile
@@ -6,15 +6,20 @@ to Catalyst higher-order functions (transform/aggregate/sequence)
 that run inside whole-stage codegen on the JVM. No Python UDFs: at
 100 TB the per-row Python hop would dominate the job.
 
+One rule for every builder: it takes SQL fragments (a column name or
+a nested builder call) and returns SQL text. Callers parse it once,
+``F.expr(tokens("text"))`` or ``selectExpr(f"{tokens('text')} AS t")``:
+one py4j round-trip per projection, where building the same trees
+from Column objects cost one per node (~1,430 for a q32 build).
+A fragment spliced inside a builder's lambda must not name that
+lambda's variables (``t``, ``i``, ``s``, ``acc``, ...).
+
 Hashing convention: 60-bit values derived from md5 (first 15 hex
 chars), which is identical in every engine — chosen over xxhash /
 murmur so DuckDB oracles can reproduce results bit-for-bit.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # Tiny per-language stopword lists for the n-gram/stopword language
 # heuristic. Deliberately small and deterministic.
@@ -26,19 +31,27 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def h60(s: Column, seed: int | Column | None = None) -> Column:
-    """Deterministic 60-bit hash of a string column (md5-based).
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal (quotes and backslashes
+    escaped), for splicing caller-supplied text into fragments."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def h60(s: str, seed: int | None = None) -> str:
+    """Deterministic 60-bit hash of a string expression (md5-based).
 
     Cross-engine reproducible: DuckDB equivalent is
     ``CAST(('0x' || substr(md5(s || '#' || seed), 1, 15)) AS BIGINT)``.
     """
     if seed is not None:
-        seed_c = F.lit(str(seed)) if isinstance(seed, int) else seed.cast("string")
-        s = F.concat(s, F.lit("#"), seed_c)
-    return F.conv(F.substring(F.md5(F.encode(s, "UTF-8")), 1, 15), 16, 10).cast("bigint")
+        s = f"concat({s}, '#', '{seed}')"
+    return (
+        f"CAST(conv(substring(md5(encode({s}, 'UTF-8')), 1, 15), 16, 10) "
+        f"AS BIGINT)"
+    )
 
 
-def h60_fast(s: Column) -> Column:
+def h60_fast(s: str) -> str:
     """60-bit hash via native ``xxhash64`` — one codegen'd JVM call
     per element vs md5's hash + hex-substring + base-conv chain
     (~3-5x less CPU over a 100 TB shingle stream). NOT cross-engine
@@ -46,37 +59,32 @@ def h60_fast(s: Column) -> Column:
     the exact hashes. Masked to 60 bits so downstream modular
     arithmetic (minhash seeds, simhash bit folds) sees the same
     non-negative range as h60."""
-    return F.xxhash64(s).bitwiseAND(F.lit((1 << 60) - 1))
+    return f"(xxhash64({s}) & {(1 << 60) - 1})"
 
 
-def tokens(text: Column) -> Column:
+def tokens(text: str) -> str:
     """Whitespace tokenization (lowercased), empty tokens removed."""
-    return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
+    return f"filter(split(lower({text}), '\\\\s+'), t -> t != '')"
 
 
-def bigrams(ts: Column) -> Column:
+def bigrams(ts: str) -> str:
     """Adjacent word-bigram array from a MATERIALIZED token array.
 
-    ``ts`` must be an already-projected column (same inlining caveat
+    ``ts`` must name an already-projected column (same inlining caveat
     as :func:`char_shingles`): the per-position lambda indexes it
     twice per bigram.  Returns an empty array for <2 tokens.
     """
-    idx = F.sequence(F.lit(1), F.size(ts) - 1)
-    return F.when(
-        F.size(ts) >= 2,
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", F.element_at(ts, i), F.element_at(ts, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    return (
+        f"CASE WHEN size({ts}) >= 2 THEN transform(sequence(1, size({ts}) - 1), "
+        f"i -> concat_ws(' ', element_at({ts}, i), element_at({ts}, i + 1))) "
+        f"ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
 
 
-def char_shingles(lowered: Column, k: int = 5, distinct: bool = True) -> Column:
+def char_shingles(lowered: str, k: int = 5, distinct: bool = True) -> str:
     """Character k-gram shingle set.
 
-    ``lowered`` MUST be a materialized (already-selected) lowercase
+    ``lowered`` MUST name a materialized (already-selected) lowercase
     column, not an inline ``lower(text)`` expression: the per-position
     lambda references it once per shingle, and Catalyst inlines
     single-use projected expressions into lambdas — an inline lower()
@@ -84,23 +92,18 @@ def char_shingles(lowered: Column, k: int = 5, distinct: bool = True) -> Column:
     column here twice (length + lambda) keeps the projection
     materialized.
     """
-    n = F.greatest(F.length(lowered) - F.lit(k - 1), F.lit(1))
-    sh = F.transform(
-        F.sequence(F.lit(1), n), lambda i: F.substring(lowered, i, F.lit(k))
+    sh = (
+        f"transform(sequence(1, greatest(length({lowered}) - {k - 1}, 1)), "
+        f"i -> substring({lowered}, i, {k}))"
     )
-    return F.array_distinct(sh) if distinct else sh
+    return f"array_distinct({sh})" if distinct else sh
 
 
-def word_ngrams(toks: Column, n: int = 3) -> Column:
+def word_ngrams(toks: str, n: int = 3) -> str:
     """Distinct word n-grams (space-joined) from a materialized tokens
     column (same inlining caveat as ``char_shingles``: pass an
     attribute, not an inline ``tokens(text)`` expression)."""
-    cnt = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
-    grams = F.transform(
-        F.sequence(F.lit(1), cnt),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.array_distinct(grams)
+    return f"array_distinct({word_ngrams_all(toks, n)})"
 
 
 # Mersenne prime 2^31-1: universal-hash modulus. (h % P) * (2j+1) stays
@@ -108,16 +111,16 @@ def word_ngrams(toks: Column, n: int = 3) -> Column:
 HASH_P = 2_147_483_647
 
 
-def hash_array(strings: Column, fast: bool = False) -> Column:
+def hash_array(strings: str, fast: bool = False) -> str:
     """One 60-bit hash per array element — the single expensive
     hashing pass; everything downstream derives from these integers.
     ``fast=True`` swaps md5 for native xxhash64 (see ``h60_fast``):
     same downstream algebra, no oracle reproducibility."""
     fn = h60_fast if fast else h60
-    return F.transform(strings, lambda s: fn(s))
+    return f"transform({strings}, s -> {fn('s')})"
 
 
-def minhash_signature(hashes: Column, num_hashes: int = 16) -> Column:
+def minhash_signature(hashes: str, num_hashes: int = 16) -> str:
     """MinHash signature from pre-hashed elements (see ``hash_array``).
 
     Per-seed hashes are derived arithmetically — ``((h % P) * (2j+1)
@@ -131,168 +134,6 @@ def minhash_signature(hashes: Column, num_hashes: int = 16) -> Column:
     projections); the fold maintains all ``num_hashes`` running minima
     at once via ``zip_with``.
     """
-    p = F.lit(HASH_P)
-    seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    init = F.array_repeat(F.lit(HASH_P).cast("bigint"), num_hashes)
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc, seeds, lambda m, j: F.least(m, ((h % p) * (j * 2 + 1) + j * 7919) % p)
-        ),
-    )
-
-
-def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Array of (band_idx, band_hash) structs for LSH bucketing.
-
-    Documents agreeing on any band land in the same bucket; the
-    bucket join replaces the O(n²) pair comparison.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.alias("band"),
-            F.md5(
-                F.encode(
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.slice(signature, b * rows_per_band + 1, rows_per_band),
-                            lambda x: x.cast("string"),
-                        ),
-                    ),
-                    "UTF-8",
-                )
-            ).alias("bucket"),
-        ),
-    )
-
-
-def simhash60_from_hashes(hashes_sql: str) -> Column:
-    """60-bit SimHash from pre-hashed tokens (see ``hash_array``).
-
-    Bit b of the result is 1 iff the sum over tokens of
-    (bit b of h60(token)) * 2 - 1 is positive.
-
-    Single pass over the hash array: the inner ``aggregate`` folds all
-    60 bit-vote counters at once (``zip_with`` against the bit-index
-    sequence), so the hash expression — which Catalyst may inline into
-    the aggregate's input position — is still evaluated exactly once
-    per row. Built as a SQL string because the shift amount is a
-    lambda variable (pyspark's ``shiftright`` only takes int
-    literals); still compiles to Catalyst higher-order functions —
-    JVM-only, no UDF.
-    """
-    return F.expr(
-        """aggregate(
-              zip_with(
-                aggregate({hs},
-                  array_repeat(0, 60),
-                  (acc, h) -> zip_with(acc, sequence(0, 59),
-                    (c, b) -> c + CAST(((shiftright(h, b) & 1) * 2 - 1) AS INT))),
-                sequence(0, 59),
-                (c, b) -> CASE WHEN c > 0 THEN shiftleft(CAST(1 AS BIGINT), b)
-                          ELSE CAST(0 AS BIGINT) END),
-              CAST(0 AS BIGINT), (acc, x) -> acc | x)""".format(hs=hashes_sql)
-    )
-
-
-def jaccard(a: Column, b: Column) -> Column:
-    """Exact Jaccard similarity of two distinct-element arrays.
-
-    The intersection size is bound ONCE as an ``aggregate`` input
-    (single-element array -> lambda variable) instead of appearing as
-    three textual copies inside the when/div tree: a naive
-    ``when(union > 0, inter / union)`` expands to three
-    ``array_intersect`` subtrees, and when a caller filters on the
-    result the pushed-down predicate duplicates all of them into the
-    join condition — measured SIX intersect evaluations per verified
-    pair in the q32 plan.  With the binding, each expression instance
-    evaluates the intersect exactly once (plan shows 2: once in the
-    pushed filter, once in the surviving-row projection).  Arithmetic
-    is unchanged (same casts, same when-guard), so results are
-    bit-identical.
-    """
-    sizes = (F.size(a) + F.size(b)).cast("double")
-    return F.aggregate(
-        F.array(F.size(F.array_intersect(a, b)).cast("double")),
-        F.lit(0.0),
-        lambda _, i: F.when(sizes - i > 0, i / (sizes - i)).otherwise(F.lit(0.0)),
-    )
-
-
-def token_count(text: Column) -> Column:
-    """Whitespace token count."""
-    return F.size(tokens(text))
-
-
-# ---------------------------------------------------------------------------
-# SQL-string twins (guide §7.3 driver overhead).
-#
-# The Column builders above cost one py4j round-trip per operator node;
-# a dedup query build (q32) was measured at ~1,430 round-trips ≈ 0.4 s
-# of pure driver time. The twins below render the IDENTICAL expression
-# trees as SQL text parsed JVM-side in one round-trip per projection:
-# same operand order, same per-element casts, `CAST(x AS DOUBLE)` /
-# bare int literals exactly where the Column versions place them — so
-# hashes, signatures, buckets and similarity values are bit-identical
-# (tests/test_text_sql.py pins Column-vs-SQL equality element-wise; the
-# dedup bench queries re-verified hash-match vs the oracle at 3 SFs).
-# Arguments are SQL fragments (a backtick-quoted column name or a
-# nested twin call), not Column objects.
-# ---------------------------------------------------------------------------
-
-
-def h60_sql(s: str, seed: int | None = None) -> str:
-    """SQL twin of :func:`h60` (md5-derived 60-bit hash)."""
-    if seed is not None:
-        s = f"concat({s}, '#', '{seed}')"
-    return (
-        f"CAST(conv(substring(md5(encode({s}, 'UTF-8')), 1, 15), 16, 10) "
-        f"AS BIGINT)"
-    )
-
-
-def h60_fast_sql(s: str) -> str:
-    """SQL twin of :func:`h60_fast` (xxhash64, 60-bit masked)."""
-    return f"(xxhash64({s}) & {(1 << 60) - 1})"
-
-
-def tokens_sql(text: str) -> str:
-    """SQL twin of :func:`tokens`."""
-    return f"filter(split(lower({text}), '\\\\s+'), t -> t != '')"
-
-
-def char_shingles_sql(lowered: str, k: int = 5, distinct: bool = True) -> str:
-    """SQL twin of :func:`char_shingles` (same materialized-column
-    caveat: pass an attribute name, not an inline lower())."""
-    sh = (
-        f"transform(sequence(1, greatest(length({lowered}) - {k - 1}, 1)), "
-        f"i -> substring({lowered}, i, {k}))"
-    )
-    return f"array_distinct({sh})" if distinct else sh
-
-
-def word_ngrams_sql(toks: str, n: int = 3) -> str:
-    """SQL twin of :func:`word_ngrams` (same materialized-column
-    caveat)."""
-    return (
-        f"array_distinct(transform("
-        f"sequence(1, greatest(size({toks}) - {n - 1}, 1)), "
-        f"i -> concat_ws(' ', slice({toks}, i, {n}))))"
-    )
-
-
-def hash_array_sql(strings: str, fast: bool = False) -> str:
-    """SQL twin of :func:`hash_array`."""
-    fn = h60_fast_sql if fast else h60_sql
-    return f"transform({strings}, s -> {fn('s')})"
-
-
-def minhash_signature_sql(hashes: str, num_hashes: int = 16) -> str:
-    """SQL twin of :func:`minhash_signature` (same universal-hash
-    algebra, same fold shape)."""
     return (
         f"aggregate({hashes}, "
         f"array_repeat(CAST({HASH_P} AS BIGINT), {num_hashes}), "
@@ -302,8 +143,12 @@ def minhash_signature_sql(hashes: str, num_hashes: int = 16) -> str:
     )
 
 
-def lsh_band_keys_sql(signature: str, bands: int, rows_per_band: int) -> str:
-    """SQL twin of :func:`lsh_band_keys`."""
+def lsh_band_keys(signature: str, bands: int, rows_per_band: int) -> str:
+    """Array of (band_idx, band_hash) structs for LSH bucketing.
+
+    Documents agreeing on any band land in the same bucket; the
+    bucket join replaces the O(n²) pair comparison.
+    """
     return (
         f"transform(sequence(0, {bands - 1}), "
         f"b -> struct(b AS band, md5(encode(concat_ws(',', "
@@ -312,27 +157,90 @@ def lsh_band_keys_sql(signature: str, bands: int, rows_per_band: int) -> str:
     )
 
 
-def _lit_array_sql(words: tuple[str, ...]) -> str:
-    """SQL twin of :func:`_lit_array`."""
-    return "array(" + ", ".join(f"'{w}'" for w in words) + ")"
+def simhash60_from_hashes(hashes: str) -> str:
+    """60-bit SimHash from pre-hashed tokens (see ``hash_array``).
+
+    Bit b of the result is 1 iff the sum over tokens of
+    (bit b of h60(token)) * 2 - 1 is positive.
+
+    Single pass over the hash array: the inner ``aggregate`` folds all
+    60 bit-vote counters at once (``zip_with`` against the bit-index
+    sequence), so the hash expression — which Catalyst may inline into
+    the aggregate's input position — is still evaluated exactly once
+    per row. The shift amount is a lambda variable, which SQL's
+    ``shiftright`` accepts (pyspark's only takes int literals).
+    """
+    return """aggregate(
+              zip_with(
+                aggregate({hs},
+                  array_repeat(0, 60),
+                  (acc, h) -> zip_with(acc, sequence(0, 59),
+                    (c, b) -> c + CAST(((shiftright(h, b) & 1) * 2 - 1) AS INT))),
+                sequence(0, 59),
+                (c, b) -> CASE WHEN c > 0 THEN shiftleft(CAST(1 AS BIGINT), b)
+                          ELSE CAST(0 AS BIGINT) END),
+              CAST(0 AS BIGINT), (acc, x) -> acc | x)""".format(hs=hashes)
 
 
-def lang_score_sql(toks: str, lang: str) -> str:
-    """SQL twin of one :func:`lang_scores` counter."""
-    arr = _lit_array_sql(LANG_STOPWORDS[lang])
-    return f"size(filter({toks}, t -> array_contains({arr}, t)))"
+def jaccard(a: str, b: str) -> str:
+    """Exact Jaccard similarity of two distinct-element arrays.
+
+    The intersection size is bound ONCE as an ``aggregate`` input
+    (single-element array -> lambda variable) instead of appearing as
+    three textual copies inside the CASE tree: a naive
+    ``CASE WHEN union > 0 THEN inter / union`` expands to three
+    ``array_intersect`` subtrees, and when a caller filters on the
+    result the pushed-down predicate duplicates all of them into the
+    join condition — measured SIX intersect evaluations per verified
+    pair in the q32 plan.  With the binding, each expression instance
+    evaluates the intersect exactly once (plan shows 2: once in the
+    pushed filter, once in the surviving-row projection).
+    """
+    sizes = f"CAST(size({a}) + size({b}) AS DOUBLE)"
+    return (
+        f"aggregate(array(CAST(size(array_intersect({a}, {b})) AS DOUBLE)), "
+        f"0.0D, (acc, i) -> CASE WHEN {sizes} - i > 0 "
+        f"THEN i / ({sizes} - i) ELSE 0.0D END)"
+    )
 
 
-def quality_features_sql(text: str, toks: str) -> dict[str, str]:
-    """SQL twin of :func:`quality_features` (same trees: the double
-    casts, the when/otherwise guards with 0.0D else branches)."""
+def token_count(text: str) -> str:
+    """Whitespace token count."""
+    return f"size({tokens(text)})"
+
+
+def bpe_ish_token_count(text: str) -> str:
+    """BPE-ish token estimate: count of word/number/punct chunks.
+
+    Splits words longer than 4 chars into ceil(len/4) subword units —
+    a deterministic stand-in for a real tokenizer's piece count.
+    """
+    return (
+        f"aggregate({tokens(text)}, CAST(0 AS BIGINT), "
+        f"(acc, t) -> acc + CAST(ceil(length(t) / 4.0D) AS BIGINT))"
+    )
+
+
+def _lit_array(words: tuple[str, ...]) -> str:
+    """Literal string array (``IN`` lists are unusable inside HOF
+    lambdas)."""
+    return "array(" + ", ".join(map(sql_str, words)) + ")"
+
+
+def quality_features(text: str, toks: str) -> dict[str, str]:
+    """Quality-scoring features: length, word stats, ratios.
+
+    ``toks`` must name a materialized tokens column (see the
+    ``char_shingles`` inlining caveat) — it is referenced by several
+    features and would otherwise be re-tokenized per feature.
+    """
     n_tok = f"CAST(size({toks}) AS DOUBLE)"
     n_chars = f"CAST(length({text}) AS DOUBLE)"
     alpha = (
         f"CAST(length(regexp_replace(lower({text}), '[^a-z]', '')) AS DOUBLE)"
     )
     punct = f"CAST(length(regexp_replace({text}, '[^.,;:!?]', '')) AS DOUBLE)"
-    stop_en = _lit_array_sql(LANG_STOPWORDS["en"])
+    stop_en = _lit_array(LANG_STOPWORDS["en"])
     n_stop = (
         f"CAST(size(filter({toks}, t -> array_contains({stop_en}, t))) "
         f"AS DOUBLE)"
@@ -348,132 +256,70 @@ def quality_features_sql(text: str, toks: str) -> dict[str, str]:
     }
 
 
-def jaccard_sql(a: str, b: str) -> str:
-    """SQL twin of :func:`jaccard` (same bind-intersect-once shape)."""
-    sizes = f"CAST(size({a}) + size({b}) AS DOUBLE)"
-    return (
-        f"aggregate(array(CAST(size(array_intersect({a}, {b})) AS DOUBLE)), "
-        f"0.0D, (acc, i) -> CASE WHEN {sizes} - i > 0 "
-        f"THEN i / ({sizes} - i) ELSE 0.0D END)"
-    )
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-ish token estimate: count of word/number/punct chunks.
-
-    Splits words longer than 4 chars into ceil(len/4) subword units —
-    a deterministic stand-in for a real tokenizer's piece count.
-    """
-    toks = tokens(text)
-    return F.aggregate(
-        toks,
-        F.lit(0).cast("bigint"),
-        lambda acc, t: acc + F.ceil(F.length(t) / F.lit(4.0)).cast("bigint"),
-    )
-
-
-def quality_features(text: Column, toks: Column) -> dict[str, Column]:
-    """Quality-scoring features: length, word stats, ratios.
-
-    ``toks`` must be a materialized tokens column (see the
-    ``char_shingles`` inlining caveat) — it is referenced by several
-    features and would otherwise be re-tokenized per feature.
-    """
-    n_tok = F.size(toks).cast("double")
-    n_chars = F.length(text).cast("double")
-    alpha = F.length(F.regexp_replace(F.lower(text), "[^a-z]", "")).cast("double")
-    punct = F.length(F.regexp_replace(text, "[^.,;:!?]", "")).cast("double")
-    stop_en = _lit_array(LANG_STOPWORDS["en"])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_en, t))).cast("double")
-    mean_wlen = F.when(n_tok > 0, (alpha / n_tok)).otherwise(F.lit(0.0))
+def lang_scores(toks: str) -> dict[str, str]:
+    """Stopword-hit count per language (language-ID heuristic)."""
     return {
-        "n_chars": n_chars,
-        "n_tokens": n_tok,
-        "alpha_ratio": F.when(n_chars > 0, alpha / n_chars).otherwise(F.lit(0.0)),
-        "punct_ratio": F.when(n_chars > 0, punct / n_chars).otherwise(F.lit(0.0)),
-        "stopword_ratio": F.when(n_tok > 0, n_stop / n_tok).otherwise(F.lit(0.0)),
-        "mean_word_len": mean_wlen,
+        lang: f"size(filter({toks}, t -> array_contains({_lit_array(sw)}, t)))"
+        for lang, sw in LANG_STOPWORDS.items()
     }
 
 
-def _lit_array(words: tuple[str, ...]) -> Column:
-    """Literal string array (Column.isin is unusable inside HOF lambdas)."""
-    return F.array(*[F.lit(w) for w in words])
+def collapse_ws(text: str) -> str:
+    """Lowercased, trimmed, whitespace runs collapsed to one space —
+    the normalization behind exact-dedup keys and line dedup."""
+    return f"regexp_replace(trim(lower({text})), '\\\\s+', ' ')"
 
 
-def lang_scores(toks: Column) -> dict[str, Column]:
-    """Stopword-hit count per language (language-ID heuristic)."""
-    def _counter(words: tuple[str, ...]) -> Column:
-        arr = _lit_array(words)
-        return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-
-    return {lang: _counter(sw) for lang, sw in LANG_STOPWORDS.items()}
-
-
-def fingerprint60(text: Column) -> Column:
+def fingerprint60(text: str) -> str:
     """Document fingerprint: 60-bit hash of the normalized text
     (lowercased, whitespace collapsed) — exact-dedup key."""
-    norm = F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")
-    return h60(norm)
+    return h60(collapse_ws(text))
 
 
-def word_ngrams_all(toks: Column, n: int = 2) -> Column:
+def word_ngrams_all(toks: str, n: int = 2) -> str:
     """ALL word n-grams (space-joined), duplicates kept — the
     multiset ``word_ngrams`` is the distinct set of. Repetition
     signals need the multiset (same inlining caveat: pass a
     materialized tokens column)."""
-    cnt = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(1), cnt),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+    return (
+        f"transform(sequence(1, greatest(size({toks}) - {n - 1}, 1)), "
+        f"i -> concat_ws(' ', slice({toks}, i, {n})))"
     )
 
 
-def duplicate_ngram_fraction(grams: Column) -> Column:
+def duplicate_ngram_fraction(grams: str) -> str:
     """Fraction of n-gram occurrences that are repeats of an earlier
     occurrence: ``1 - distinct/total`` over the n-gram multiset
     (Gopher-style repetition signal; Rae et al. 2021 use the dual
     "fraction of characters in duplicate n-grams"). 0 for empty
     inputs. Pass a materialized ``word_ngrams_all`` column."""
-    total = F.size(grams).cast("double")
-    return F.when(
-        total > 0,
-        F.lit(1.0) - F.size(F.array_distinct(grams)).cast("double") / total,
-    ).otherwise(F.lit(0.0))
+    total = f"CAST(size({grams}) AS DOUBLE)"
+    return (
+        f"CASE WHEN {total} > 0 THEN 1.0D - "
+        f"CAST(size(array_distinct({grams})) AS DOUBLE) / {total} "
+        f"ELSE 0.0D END"
+    )
 
 
-def top_ngram_fraction(grams: Column) -> Column:
+def top_ngram_fraction(grams: str) -> str:
     """Fraction of n-gram occurrences taken by the single most
     frequent n-gram (Gopher-style: a document whose top 2-gram covers
     >20% of all 2-grams is boilerplate/spam). Single-pass JVM
     expression: sort the multiset, then one fold tracking
     (previous gram, current run, best run) — no explode, no shuffle.
     """
-    sorted_g = F.array_sort(grams)
-    acc0 = F.struct(
-        F.lit("").alias("prev"),
-        F.lit(0).cast("bigint").alias("run"),
-        F.lit(0).cast("bigint").alias("best"),
+    run = "CASE WHEN g = acc.prev THEN acc.run + 1 ELSE CAST(1 AS BIGINT) END"
+    folded = (
+        f"aggregate(array_sort({grams}), "
+        f"struct('' AS prev, CAST(0 AS BIGINT) AS run, "
+        f"CAST(0 AS BIGINT) AS best), "
+        f"(acc, g) -> struct(g AS prev, {run} AS run, "
+        f"greatest(acc.best, {run}) AS best))"
     )
-    folded = F.aggregate(
-        sorted_g,
-        acc0,
-        lambda acc, g: F.struct(
-            g.alias("prev"),
-            F.when(g == acc["prev"], acc["run"] + 1)
-            .otherwise(F.lit(1).cast("bigint"))
-            .alias("run"),
-            F.greatest(
-                acc["best"],
-                F.when(g == acc["prev"], acc["run"] + 1).otherwise(
-                    F.lit(1).cast("bigint")
-                ),
-            ).alias("best"),
-        ),
-    )
-    total = F.size(grams).cast("double")
-    return F.when(total > 0, folded["best"].cast("double") / total).otherwise(
-        F.lit(0.0)
+    total = f"CAST(size({grams}) AS DOUBLE)"
+    return (
+        f"CASE WHEN {total} > 0 THEN CAST({folded}.best AS DOUBLE) / {total} "
+        f"ELSE 0.0D END"
     )
 
 
@@ -494,26 +340,29 @@ _PII_PATTERNS = (
 )
 
 
-def scrub_pii(text: Column) -> Column:
+def scrub_pii(text: str) -> str:
     """Redact emails, URLs, IPv4 addresses, and phone numbers with
     typed placeholder tokens. Deliberately aggressive on digit runs
     (7-14 digits with separators read as phones) — pre-training
     hygiene favors recall over precision here."""
     out = text
     for pat, repl in _PII_PATTERNS:
-        out = F.regexp_replace(out, pat, repl)
+        out = f"regexp_replace({out}, {sql_str(pat)}, {sql_str(repl)})"
     return out
 
 
-def normalize_text(text: Column) -> Column:
+_CONTROL_CHARS = r"[\x00-\x08\x0b-\x1f\x7f-\x9f]"
+_BLANK_RUN = r"[ \t]+"
+
+
+def normalize_text(text: str) -> str:
     """Ingest normalization: strip C0/C1 control chars (keep \\n\\t),
     collapse runs of spaces/tabs, trim."""
-    no_ctl = F.regexp_replace(text, r"[\x00-\x08\x0b-\x1f\x7f-\x9f]", "")
-    collapsed = F.regexp_replace(no_ctl, r"[ \t]+", " ")
-    return F.trim(collapsed)
+    no_ctl = f"regexp_replace({text}, {sql_str(_CONTROL_CHARS)}, '')"
+    return f"trim(regexp_replace({no_ctl}, {sql_str(_BLANK_RUN)}, ' '))"
 
 
-def charclass_counts(text: Column) -> dict[str, Column]:
+def charclass_counts(text: str) -> dict[str, str]:
     """Character-class census: uppercase / digit / punctuation /
     whitespace counts and ratios over the raw text.
 
@@ -523,32 +372,32 @@ def charclass_counts(text: Column) -> dict[str, Column]:
     entirely JVM-side, no UDF. ASCII classes only, so Java regex and
     RE2 (DuckDB oracle) agree byte-for-byte.
     """
-    n_chars = F.length(text).cast("double")
+    n_chars = f"CAST(length({text}) AS DOUBLE)"
 
-    def _count(cls: str) -> Column:
+    def _count(cls: str) -> str:
         return (
-            F.length(text) - F.length(F.regexp_replace(text, cls, ""))
-        ).cast("bigint")
+            f"CAST(length({text}) - length(regexp_replace({text}, "
+            f"{sql_str(cls)}, '')) AS BIGINT)"
+        )
 
-    n_upper = _count("[A-Z]")
-    n_digit = _count("[0-9]")
-    n_punct = _count("[.,;:!?]")
-    n_space = _count("[ \\t\\n]")
-    safe = F.when(n_chars > 0, n_chars).otherwise(F.lit(1.0))
+    counts = {
+        "n_upper": _count("[A-Z]"),
+        "n_digit": _count("[0-9]"),
+        "n_punct": _count("[.,;:!?]"),
+        "n_space": _count("[ \\t\\n]"),
+    }
+    safe = f"CASE WHEN {n_chars} > 0 THEN {n_chars} ELSE 1.0D END"
     return {
-        "n_chars": F.length(text).cast("bigint"),
-        "n_upper": n_upper,
-        "n_digit": n_digit,
-        "n_punct": n_punct,
-        "n_space": n_space,
-        "upper_ratio": n_upper.cast("double") / safe,
-        "digit_ratio": n_digit.cast("double") / safe,
-        "punct_ratio": n_punct.cast("double") / safe,
-        "space_ratio": n_space.cast("double") / safe,
+        "n_chars": f"CAST(length({text}) AS BIGINT)",
+        **counts,
+        **{
+            f"{k[2:]}_ratio": f"CAST({c} AS DOUBLE) / {safe}"
+            for k, c in counts.items()
+        },
     }
 
 
-def readability_features(text: Column) -> dict[str, Column]:
+def readability_features(text: str) -> dict[str, str]:
     """Flesch reading-ease via deterministic proxies: words =
     whitespace tokens, sentences = ``[.!?]+`` runs (min 1),
     syllables = ``[aeiouy]+`` vowel groups in the lowercased text.
@@ -558,23 +407,23 @@ def readability_features(text: Column) -> dict[str, Column]:
     which is what corpus-quality filtering needs. All counts are
     ``regexp_extract_all`` sizes — vectorized, no UDF.
     """
-    n_words = F.size(tokens(text)).cast("double")
-    n_sents = F.greatest(
-        F.size(F.regexp_extract_all(text, F.lit(r"[.!?]+"), F.lit(0))),
-        F.lit(1),
-    ).cast("double")
-    n_syll = F.size(
-        F.regexp_extract_all(F.lower(text), F.lit("[aeiouy]+"), F.lit(0))
-    ).cast("double")
-    flesch = F.when(
-        n_words > 0,
-        F.lit(206.835)
-        - F.lit(1.015) * (n_words / n_sents)
-        - F.lit(84.6) * (n_syll / n_words),
-    ).otherwise(F.lit(0.0))
+    n_words = f"CAST(size({tokens(text)}) AS DOUBLE)"
+    n_sents = (
+        f"CAST(greatest(size(regexp_extract_all({text}, '[.!?]+', 0)), 1) "
+        f"AS DOUBLE)"
+    )
+    n_syll = (
+        f"CAST(size(regexp_extract_all(lower({text}), '[aeiouy]+', 0)) "
+        f"AS DOUBLE)"
+    )
+    flesch = (
+        f"CASE WHEN {n_words} > 0 THEN 206.835D - 1.015D * "
+        f"({n_words} / {n_sents}) - 84.6D * ({n_syll} / {n_words}) "
+        f"ELSE 0.0D END"
+    )
     return {
-        "n_words": n_words.cast("bigint"),
-        "n_sentences": n_sents.cast("bigint"),
-        "n_syllables": n_syll.cast("bigint"),
+        "n_words": f"CAST({n_words} AS BIGINT)",
+        "n_sentences": f"CAST({n_sents} AS BIGINT)",
+        "n_syllables": f"CAST({n_syll} AS BIGINT)",
         "flesch": flesch,
     }

@@ -1,9 +1,11 @@
-"""Vector column functions (embedding similarity).
+"""Vector expressions (embedding similarity).
 
 All JVM-side Catalyst expressions. Folds are sequential
 left-to-right, matching DuckDB's ``list_reduce`` order, so dot
 products and norms are bit-identical across engines (both promote
-float elements to double before accumulating).
+float elements to double before accumulating). ``cosine_similarity``
+is SQL text for ``F.expr`` (the knn distance folds in
+``operators/knn.py`` are too); the squared-L2 builders take Columns.
 """
 
 from __future__ import annotations
@@ -16,44 +18,21 @@ def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(as_double(a), as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm2(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(as_double(a), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm2(a) * norm2(b))
-
-
-def cosine_distance(a: Column, b: Column) -> Column:
-    return 1.0 - cosine_similarity(a, b)
-
-
-def cosine_similarity_sql(a: str, b: str) -> str:
-    """SQL-string twin of ``cosine_similarity`` (guide §7.3 — one
-    ``F.expr`` parse instead of ~100 py4j round-trips per call site).
-    Spells the IDENTICAL expression tree: per-element double casts via
-    ``transform`` (matching ``as_double``), sequential left-to-right
-    folds, ``0.0D`` double literals — so values stay bit-identical to
-    the Column version and the DuckDB oracle."""
+def cosine_similarity(a: str, b: str) -> str:
+    """Cosine similarity of two SQL array fragments, as SQL text for
+    ``F.expr`` (one JVM parse instead of ~100 py4j round-trips of
+    Column construction). Per-element double casts via ``transform``
+    (matching ``as_double``), sequential left-to-right folds, ``0.0D``
+    double literals (a bare SQL ``0.0`` parses as DECIMAL)."""
     ad = f"transform({a}, x -> CAST(x AS DOUBLE))"
     bd = f"transform({b}, x -> CAST(x AS DOUBLE))"
-    dot_sql = (
+    dot = (
         f"aggregate(zip_with({ad}, {bd}, (x, y) -> x * y), "
         f"0.0D, (acc, x) -> acc + x)"
     )
     na = f"SQRT(aggregate({ad}, 0.0D, (acc, x) -> acc + x * x))"
     nb = f"SQRT(aggregate({bd}, 0.0D, (acc, x) -> acc + x * x))"
-    return f"{dot_sql} / ({na} * {nb})"
+    return f"{dot} / ({na} * {nb})"
 
 
 def sq_euclidean(a: Column, b: Column) -> Column:

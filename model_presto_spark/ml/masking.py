@@ -13,6 +13,10 @@ Spark-first: mask decisions are **hash-derived, not rand()** —
 reproducible across retries, partitionings, and engines (rand(seed)
 is only stable for a fixed partitioning). Masking itself is
 ``transform``/``when`` over the series array: JVM-side, no UDF.
+
+The mask builders take the key as a SQL fragment and return SQL text
+for ``F.expr`` (the draws are ``functions.text.h60``, which is SQL
+text); ``apply_*`` and ``mask_budget`` take Columns.
 """
 
 from __future__ import annotations
@@ -25,44 +29,43 @@ from model_presto_spark.functions.text import h60
 MASK_SENTINEL = 0.0  # reference zeroes masked tokens (masking.py:134-146)
 
 
-def _keep_prob_hash(key: Column, idx: Column, seed: int) -> Column:
+def _keep_prob_hash(key: str, idx: str, seed: int) -> str:
     """Uniform-ish value in [0, 100) from (key, index, seed)."""
-    return h60(
-        F.concat(key.cast("string"), F.lit("_"), idx.cast("string")), seed
-    ) % 100
+    draw = f"concat(CAST({key} AS STRING), '_', CAST({idx} AS STRING))"
+    return f"{h60(draw, seed)} % 100"
 
 
 def timestep_mask(
-    key: Column, num_timesteps: int = 12, ratio: float = 0.5, seed: int = 0
-) -> Column:
+    key: str, num_timesteps: int = 12, ratio: float = 0.5, seed: int = 0
+) -> str:
     """Boolean mask array (True = masked) choosing random timesteps
     per key (reference random_timesteps, masking.py:90-103)."""
     pct = int(ratio * 100)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_timesteps - 1)),
-        lambda t: _keep_prob_hash(key, t, seed) < pct,
+    return (
+        f"transform(sequence(0, {num_timesteps - 1}), "
+        f"t -> {_keep_prob_hash(key, 't', seed)} < {pct})"
     )
 
 
 def chunk_timestep_mask(
-    key: Column, num_timesteps: int = 12, chunk: int = 6, seed: int = 0
-) -> Column:
+    key: str, num_timesteps: int = 12, chunk: int = 6, seed: int = 0
+) -> str:
     """Contiguous chunk mask: ``chunk`` consecutive timesteps starting
     at a key-derived offset (reference chunk_timesteps,
     masking.py:105-112)."""
-    start = h60(key.cast("string"), seed) % (num_timesteps - chunk + 1)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_timesteps - 1)),
-        lambda t: (t >= start) & (t < start + chunk),
+    start = f"({h60(f'CAST({key} AS STRING)', seed)} % {num_timesteps - chunk + 1})"
+    return (
+        f"transform(sequence(0, {num_timesteps - 1}), "
+        f"t -> t >= {start} AND t < {start} + {chunk})"
     )
 
 
 def band_group_mask(
-    key: Column,
+    key: str,
     group_sizes: tuple[int, ...],
     ratio: float = 0.5,
     seed: int = 0,
-) -> Column:
+) -> str:
     """Per-band mask (True = masked) that masks whole band-groups
     (reference group_bands, masking.py:60-75; group index map
     s1_s2_era5_srtm.py:96-108). Returns array<boolean> of
@@ -70,18 +73,18 @@ def band_group_mask(
     pct = int(ratio * 100)
     flags = []
     for g, size in enumerate(group_sizes):
-        masked = _keep_prob_hash(key, F.lit(g), seed) < pct
+        masked = f"{_keep_prob_hash(key, str(g), seed)} < {pct}"
         flags.extend([masked] * size)
-    return F.array(*flags)
+    return f"array({', '.join(flags)})"
 
 
 def random_combinations_mask(
-    key: Column,
+    key: str,
     num_timesteps: int = 12,
     group_sizes: tuple[int, ...] = (1, 1, 1),
     ratio: float = 0.5,
     seed: int = 0,
-) -> Column:
+) -> str:
     """Per-(timestep, band-group) token sampling (reference
     random_combinations, masking.py:36-58): every (t, g) token gets an
     independent hash draw; all bands of group g at timestep t share
@@ -94,18 +97,13 @@ def random_combinations_mask(
     """
     pct = int(ratio * 100)
     n_groups = len(group_sizes)
-
-    def band_flags(t: Column) -> Column:
-        flags = []
-        for g, size in enumerate(group_sizes):
-            draw = (
-                _keep_prob_hash(key, t * n_groups + F.lit(g), seed) < pct
-            )
-            flags.extend([draw] * size)
-        return F.array(*flags)
-
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_timesteps - 1)), band_flags
+    flags = []
+    for g, size in enumerate(group_sizes):
+        draw = _keep_prob_hash(key, f"t * {n_groups} + {g}", seed)
+        flags.extend([f"{draw} < {pct}"] * size)
+    return (
+        f"transform(sequence(0, {num_timesteps - 1}), "
+        f"t -> array({', '.join(flags)}))"
     )
 
 

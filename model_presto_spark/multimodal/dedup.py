@@ -46,7 +46,7 @@ def video_dup_pairs(
         .filter((F.size("ids") > 1) & (F.size("ids") <= max_frame_freq))
     )
     common = (
-        buckets.select(F.explode_outer(_pairs_within("ids")).alias("pr"))
+        buckets.select(F.explode_outer(F.expr(_pairs_within("ids"))).alias("pr"))
         .groupBy(F.col("pr.id_a").alias("id_a"), F.col("pr.id_b").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )

@@ -45,7 +45,7 @@ def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over the whitespace tokenization — the only
     relation BPE training ever iterates on."""
     toks = docs.select(
-        F.explode_outer(T.tokens(F.col(text_col))).alias("w")
+        F.explode_outer(F.expr(T.tokens(f"`{text_col}`"))).alias("w")
     ).where(F.col("w").isNotNull())
     return toks.groupBy("w").agg(F.count("*").alias("freq"))
 

@@ -46,8 +46,8 @@ def ngram_contamination(
     # spread: the corpus tokenize+ngram pass is the dominant CPU and
     # must not inherit a single-file scan's one partition
     corpus_grams = spread(corpus).select(
-        F.col(id_col).alias("__id"), tokens(F.col(text_col)).alias("__toks")
-    ).select("__id", word_ngrams(F.col("__toks"), n).alias("__grams"))
+        F.col(id_col).alias("__id"), F.expr(tokens(f"`{text_col}`")).alias("__toks")
+    ).select("__id", F.expr(word_ngrams("__toks", n)).alias("__grams"))
 
     # explode_outer, NOT explode: Catalyst's InferFiltersFromGenerate
     # adds a size(...)>0 pre-filter under a plain explode that
@@ -56,8 +56,8 @@ def ngram_contamination(
     # lambda — O(len^2); measured 5x on q60). The gram arrays here are
     # never empty (word_ngrams pads to >=1), so outer is identical.
     bench_gram_set = (
-        benchmark.select(tokens(F.col(text_col)).alias("__toks"))
-        .select(F.explode_outer(word_ngrams(F.col("__toks"), n)).alias("gram"))
+        benchmark.select(F.expr(tokens(f"`{text_col}`")).alias("__toks"))
+        .select(F.explode_outer(F.expr(word_ngrams("__toks", n))).alias("gram"))
         .distinct()
     )
 

@@ -33,57 +33,20 @@ _LOG = logging.getLogger(__name__)
 from model_presto_spark.io import spread
 from model_presto_spark.functions.text import (
     char_shingles,
-    char_shingles_sql,
     fingerprint60,
     hash_array,
-    hash_array_sql,
     jaccard,
-    jaccard_sql,
     lsh_band_keys,
-    lsh_band_keys_sql,
     minhash_signature,
-    minhash_signature_sql,
     simhash60_from_hashes,
     tokens,
-    tokens_sql,
     word_ngrams,
-    word_ngrams_sql,
 )
 
 
-def _pairs_within(ids_col: str) -> F.Column:
+def _pairs_within(ids: str) -> str:
     """All (id_a < id_b) pairs from a sorted id array — the in-bucket
     pair generator for inverted-index / LSH-bucket candidate mining."""
-    ids = F.col(ids_col)
-    return F.flatten(
-        F.transform(
-            ids,
-            lambda a, i: F.transform(
-                F.slice(ids, i + 2, F.greatest(F.size(ids), F.lit(1))),
-                lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-            ),
-        )
-    )
-
-
-def _chain_pairs(ids_col: str) -> F.Column:
-    """Consecutive (id_a < id_b) pairs from a sorted id array — O(d)
-    edges that connect the same membership a full O(d²) pair set
-    would, relying on transitive closure (operators/graph.py) for the
-    cluster. The mega-bucket guard: a bucket of thousands of ids
-    means thousands of near-identical documents, where enumerating
-    every pair is pure waste."""
-    ids = F.col(ids_col)
-    return F.transform(
-        F.slice(ids, 1, F.size(ids) - 1),
-        lambda a, i: F.struct(
-            a.alias("id_a"), F.element_at(ids, i + 2).alias("id_b")
-        ),
-    )
-
-
-def _pairs_within_sql(ids: str) -> str:
-    """SQL twin of :func:`_pairs_within` (guide §7.3; same tree)."""
     return (
         f"flatten(transform({ids}, (a, i) -> "
         f"transform(slice({ids}, i + 2, greatest(size({ids}), 1)), "
@@ -91,8 +54,13 @@ def _pairs_within_sql(ids: str) -> str:
     )
 
 
-def _chain_pairs_sql(ids: str) -> str:
-    """SQL twin of :func:`_chain_pairs`."""
+def _chain_pairs(ids: str) -> str:
+    """Consecutive (id_a < id_b) pairs from a sorted id array — O(d)
+    edges that connect the same membership a full O(d²) pair set
+    would, relying on transitive closure (operators/graph.py) for the
+    cluster. The mega-bucket guard: a bucket of thousands of ids
+    means thousands of near-identical documents, where enumerating
+    every pair is pure waste."""
     return (
         f"transform(slice({ids}, 1, size({ids}) - 1), (a, i) -> "
         f"struct(a AS id_a, element_at({ids}, i + 2) AS id_b))"
@@ -105,7 +73,10 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     Adds ``fingerprint`` and ``dup_count`` columns; one row per
     distinct fingerprint.
     """
-    fp = df.select(F.col(id_col), fingerprint60(F.col(text_col)).alias("fingerprint"))
+    fp = df.select(
+        F.col(id_col),
+        F.expr(fingerprint60(f"`{text_col}`")).alias("fingerprint"),
+    )
     return fp.groupBy("fingerprint").agg(
         F.min(id_col).alias(id_col),
         F.count(F.lit(1)).alias("dup_count"),
@@ -198,11 +169,11 @@ def minhash_lsh_pairs(
     # not inherit a small scan's partitioning (io.spread docstring).
     # lower(text) materialized next: char_shingles references it per
     # position and an inline lower() would be recomputed O(len) times.
-    # String-expression build from here down (guide §7.3): the Column
-    # construction of this operator cost ~1,430 py4j round-trips per
-    # q32 build; the SQL twins parse the identical trees JVM-side
-    # (tests/test_text_sql.py pins value equality, oracle hash-match
-    # re-verified at 3 SFs for the dedup bench queries).
+    # String-expression build from here down (guide §7.3): building
+    # this operator with Column objects cost ~1,430 py4j round-trips
+    # per q32 build; the SQL text parses JVM-side in one round-trip
+    # per projection (tests/test_text_sql.py pins the fragments
+    # against DuckDB).
     low = spread(df).selectExpr(
         f"`{id_col}` AS id", f"lower(`{text_col}`) AS lc"
     )
@@ -214,7 +185,7 @@ def minhash_lsh_pairs(
     # md5-derived hash, so intersection counts agree).
     sh = low.selectExpr(
         "id",
-        f"{hash_array_sql(char_shingles_sql('lc', shingle_k), fast=fast_hash)}"
+        f"{hash_array(char_shingles('lc', shingle_k), fast=fast_hash)}"
         f" AS hs",
     )
     if reuse:
@@ -250,7 +221,7 @@ def minhash_lsh_pairs(
             signature_screen = None
     # The 16 seed-minima fold in one pass over the hash array.
     sig = sh.selectExpr(
-        "id", f"{minhash_signature_sql('hs', num_hashes)} AS sig"
+        "id", f"{minhash_signature('hs', num_hashes)} AS sig"
     )
     # The band stage shuffles only (band, bucket, id) — never shingle
     # bodies. Pairs are generated by grouping ids per bucket rather
@@ -266,7 +237,7 @@ def minhash_lsh_pairs(
     if signature_screen is None:
         banded = sig.selectExpr(
             "id",
-            f"explode_outer({lsh_band_keys_sql('sig', bands, rows_per_band)})"
+            f"explode_outer({lsh_band_keys('sig', bands, rows_per_band)})"
             f" AS bk",
         ).selectExpr("bk.band AS band", "bk.bucket AS bucket", "id")
         buckets = (
@@ -279,8 +250,8 @@ def minhash_lsh_pairs(
         # size>1, so the pair array is never empty).
         pair_arr = (
             f"CASE WHEN size(ids) <= {int(max_bucket_size)} "
-            f"THEN {_pairs_within_sql('ids')} "
-            f"ELSE {_chain_pairs_sql('ids')} END"
+            f"THEN {_pairs_within('ids')} "
+            f"ELSE {_chain_pairs('ids')} END"
         )
         # spread the bucket rows before the pair expansion: the bucket
         # aggregation's shuffle output is tiny in BYTES (a few thousand
@@ -305,7 +276,7 @@ def minhash_lsh_pairs(
             "id",
             "sig",
             F.explode_outer(
-                lsh_band_keys(F.col("sig"), bands, rows_per_band)
+                F.expr(lsh_band_keys("sig", bands, rows_per_band))
             ).alias("bk"),
         ).select(
             F.col("bk.band").alias("band"),
@@ -375,7 +346,7 @@ def minhash_lsh_pairs(
         cand.join(sh_a, "id_a")
         .join(sh_b, "id_b")
         .selectExpr(
-            "id_a", "id_b", f"{jaccard_sql('sh_a', 'sh_b')} AS jaccard_sim"
+            "id_a", "id_b", f"{jaccard('sh_a', 'sh_b')} AS jaccard_sim"
         )
         .where(f"jaccard_sim >= CAST({threshold!r} AS DOUBLE)")
     )
@@ -393,11 +364,11 @@ def simhash_signatures(
     """
     hashed = spread(df).selectExpr(
         f"`{id_col}`",
-        f"{hash_array_sql(tokens_sql(f'`{text_col}`'), fast=fast_hash)}"
+        f"{hash_array(tokens(f'`{text_col}`'), fast=fast_hash)}"
         f" AS hashes",
     )
-    return hashed.select(
-        F.col(id_col), simhash60_from_hashes("hashes").alias("simhash")
+    return hashed.selectExpr(
+        f"`{id_col}`", f"{simhash60_from_hashes('hashes')} AS simhash"
     )
 
 
@@ -457,15 +428,14 @@ def ngram_jaccard_pairs(
     # keys for the inverted-index join (hash collisions are shared by
     # any engine using the same md5-derived hash, so counts agree).
     # Tokens materialized first — see char_shingles inlining caveat.
-    # String-expression build (guide §7.3; identical trees to the
-    # Column forms — see minhash_lsh_pairs note).
+    # String-expression build (guide §7.3; see minhash_lsh_pairs note).
     toksed = spread(df).selectExpr(
-        f"`{id_col}` AS id", f"{tokens_sql(f'`{text_col}`')} AS toks"
+        f"`{id_col}` AS id", f"{tokens(f'`{text_col}`')} AS toks"
     )
     grams = toksed.selectExpr(
         "id",
         f"array_distinct("
-        f"{hash_array_sql(word_ngrams_sql('toks', n), fast=fast_hash)})"
+        f"{hash_array(word_ngrams('toks', n), fast=fast_hash)})"
         f" AS grams",
     )
     if reuse:
@@ -493,7 +463,7 @@ def ngram_jaccard_pairs(
             # the inverted-index shuffle — see the minhash candidate
             # stage note.
             spread(buckets)
-            .selectExpr(f"explode_outer({_pairs_within_sql('ids')}) AS pr")
+            .selectExpr(f"explode_outer({_pairs_within('ids')}) AS pr")
             .groupBy(
                 F.col("pr.id_a").alias("id_a"), F.col("pr.id_b").alias("id_b")
             )
@@ -684,7 +654,7 @@ def embedding_dup_pairs(
         .select(
             "id_a",
             "id_b",
-            cosine_similarity(F.col("va"), F.col("vb")).alias("cosine_sim"),
+            F.expr(cosine_similarity("va", "vb")).alias("cosine_sim"),
         )
         .filter(F.col("cosine_sim") >= threshold)
     )
@@ -769,7 +739,7 @@ def _lsh_dup_pairs(
         .select(
             "id_a",
             "id_b",
-            cosine_similarity(F.col("va"), F.col("vb")).alias("cosine_sim"),
+            F.expr(cosine_similarity("va", "vb")).alias("cosine_sim"),
         )
         .filter(F.col("cosine_sim") >= threshold)
     )
@@ -873,7 +843,7 @@ def window_hashes(
     # spread first: the per-window md5 below (one hash per token
     # position) is the dominant CPU of every winnowing/span-dedup
     # caller and must not inherit the scan's single partition
-    toksed = spread(docs).select(id_col, tokens(F.col(text_col)).alias("toks"))
+    toksed = spread(docs).select(id_col, F.expr(tokens(f"`{text_col}`")).alias("toks"))
     n = F.size("toks")
     idx = F.when(
         n >= k, F.sequence(F.lit(1), n - k + 1)
@@ -881,8 +851,8 @@ def window_hashes(
     win = toksed.select(
         id_col, "toks", F.explode_outer(idx).alias("i")
     )
-    wtext = F.array_join(F.slice(F.col("toks"), F.col("i"), k), " ")
-    h = h60_fast(wtext) if fast_hash else h60(wtext)
+    wtext = f"array_join(slice(toks, i, {int(k)}), ' ')"
+    h = F.expr(h60_fast(wtext) if fast_hash else h60(wtext))
     return win.select(
         id_col, "i", F.when(F.col("i").isNotNull(), h).alias("whash")
     )
@@ -976,7 +946,7 @@ def remove_dup_spans(
         .agg(F.sort_array(F.collect_list("s")).alias("dup_starts"))
     )
     base = docs.select(
-        id_col, tokens(F.col(text_col)).alias("toks")
+        id_col, F.expr(tokens(f"`{text_col}`")).alias("toks")
     ).join(dup_starts, id_col, "left")
     ds = F.coalesce(F.col("dup_starts"), F.array().cast("array<int>"))
     kept = F.filter(
@@ -1050,7 +1020,7 @@ def containment_auto_route(
     if approx_docs is not None and approx_gram_ratio is not None:
         n_docs, ratio = approx_docs, approx_gram_ratio
     else:
-        toks = F.size(tokens(F.col(text_col)))
+        toks = F.size(F.expr(tokens(f"`{text_col}`")))
         gcnt = toks - n + 1
         probe = df.agg(
             F.count(F.lit(1)).alias("n"),
@@ -1254,15 +1224,14 @@ def ngram_containment_pairs(
             f"candidates must be 'index', 'lsh', 'lsh_ensemble', or "
             f"'auto': {candidates}"
         )
-    # String-expression build (guide §7.3; identical trees to the
-    # Column forms — see minhash_lsh_pairs note).
+    # String-expression build (guide §7.3; see minhash_lsh_pairs note).
     toksed = spread(df).selectExpr(
-        f"`{id_col}` AS id", f"{tokens_sql(f'`{text_col}`')} AS toks"
+        f"`{id_col}` AS id", f"{tokens(f'`{text_col}`')} AS toks"
     )
     grams = toksed.selectExpr(
         "id",
         f"array_distinct("
-        f"{hash_array_sql(word_ngrams_sql('toks', n), fast=fast_hash)})"
+        f"{hash_array(word_ngrams('toks', n), fast=fast_hash)})"
         f" AS grams",
     )
     if reuse:
@@ -1390,12 +1359,12 @@ def _containment_lsh_candidates(
     ``ngram_containment_pairs(candidates='lsh')``."""
     rows_per_band = max(num_hashes // bands, 1)
     sig = grams.select(
-        "id", minhash_signature(F.col("grams"), num_hashes).alias("sig")
+        "id", F.expr(minhash_signature("grams", num_hashes)).alias("sig")
     )
     banded = sig.select(
         "id",
         F.explode_outer(
-            lsh_band_keys(F.col("sig"), bands, rows_per_band)
+            F.expr(lsh_band_keys("sig", bands, rows_per_band))
         ).alias("bk"),
     ).select(F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket"), "id")
     buckets = (
@@ -1404,8 +1373,8 @@ def _containment_lsh_candidates(
         .filter(F.size("ids") > 1)
     )
     pair_arr = F.when(
-        F.size("ids") <= max_bucket_size, _pairs_within("ids")
-    ).otherwise(_chain_pairs("ids"))
+        F.size("ids") <= max_bucket_size, F.expr(_pairs_within("ids"))
+    ).otherwise(F.expr(_chain_pairs("ids")))
     # generator-side spread: see the minhash candidate stage note
     return (
         spread(buckets).select(F.explode_outer(pair_arr).alias("pr"))
@@ -1529,13 +1498,13 @@ def _containment_ensemble_candidates(
         "id",
         "bkt",
         "ng",
-        minhash_signature(F.col("grams"), num_hashes).alias("sig"),
+        F.expr(minhash_signature("grams", num_hashes)).alias("sig"),
     # the num_hashes-minima fold feeds one key branch per family —
     # cut the lineage so it computes once, not per branch
     ).localCheckpoint(eager=True)
     parts = []
     for fam_i, ((b, r), gaps) in enumerate(sorted(families.items())):
-        keys = F.explode_outer(lsh_band_keys(F.col("sig"), b, r)).alias("bk")
+        keys = F.explode_outer(F.expr(lsh_band_keys("sig", b, r))).alias("bk")
         posting = sig.select(
             F.lit(fam_i).alias("fam"), "id", "bkt", "ng", keys
         ).select(
@@ -1901,19 +1870,22 @@ def source_overlap(
 
     Returns (source_a, source_b, n_shared, n_a, n_b, jaccard).
     """
-    from model_presto_spark.functions.text import fingerprint60, tokens
+    from model_presto_spark.functions.text import collapse_ws, fingerprint60, tokens
 
     if prefix_tokens is None:
-        key = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
+        key = collapse_ws(f"`{text_col}`")
     else:
-        key = F.concat_ws(
-            " ", F.slice(tokens(F.col(text_col)), 1, prefix_tokens)
+        key = (
+            f"concat_ws(' ', slice({tokens(f'`{text_col}`')}, 1, "
+            f"{int(prefix_tokens)}))"
         )
     # materialize: fp is referenced three times (both pair-join sides
     # and the size aggregation) — an un-materialized plan re-runs the
     # body tokenize/fingerprint/distinct per reference
     fp = (
-        df.select(F.col(source_col).alias("src"), fingerprint60(key).alias("fp"))
+        df.select(
+            F.col(source_col).alias("src"), F.expr(fingerprint60(key)).alias("fp")
+        )
         .distinct()
         .localCheckpoint(eager=False)
     )

@@ -81,7 +81,7 @@ def hashed_ngram_buckets(
     # pass is the dominant CPU and must not inherit a small scan's
     # single partition (io.spread docstring; round-5 pathology #3)
     toksed = spread(docs).select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
+        F.col(id_col).alias("id"), F.expr(tokens(f"`{text_col}`")).alias("toks")
     )
     feats = toksed.select(
         "id",
@@ -98,7 +98,7 @@ def hashed_ngram_buckets(
     g = feats.select("id", F.explode_outer("feats").alias("feat")).filter(
         F.col("feat").isNotNull()
     )
-    h = h60_fast(F.col("feat")) if fast_hash else h60(F.col("feat"))
+    h = F.expr(h60_fast("feat") if fast_hash else h60("feat"))
     return (
         g.select("id", F.pmod(h, F.lit(n_buckets)).alias("bucket"))
         .groupBy("id", "bucket")
@@ -187,15 +187,17 @@ def dsir_weights(
     return scored.select(F.col("id").alias(id_col), "n_feats", "log_weight")
 
 
-def gumbel_key(id_col: F.Column, seed: int = 42) -> F.Column:
+def gumbel_key(id_col: str, seed: int = 42) -> F.Column:
     """Deterministic standard-Gumbel draw keyed on (id, seed):
-    g = -ln(-ln(u)), u = (h60(id#seed) + 1) / (2^60 + 1) in (0,1)."""
+    g = -ln(-ln(u)), u = (h60(id#seed) + 1) / (2^60 + 1) in (0,1).
+    ``id_col`` is a SQL fragment (e.g. a backtick-quoted name)."""
     # (h + 1) is computed in BIGINT before the double cast: at 2^60
     # magnitude double spacing is 256, so cast-then-add would absorb
     # the +1 differently than an engine that adds first — a real
     # cross-engine divergence at rounding boundaries (~1/128 of ids).
     u = (
-        h60(F.concat(id_col.cast("string"), F.lit(f"#gumbel{seed}"))) + F.lit(1)
+        F.expr(h60(f"concat(CAST({id_col} AS STRING), '#gumbel{seed}')"))
+        + F.lit(1)
     ).cast("double") / F.lit(TWO60 + 1.0)
     return -F.log(-F.log(u))
 
@@ -224,6 +226,6 @@ def dsir_sample(
         id_col,
         "n_feats",
         "log_weight",
-        (F.col("log_weight") + gumbel_key(F.col(id_col), seed)).alias("key"),
+        (F.col("log_weight") + gumbel_key(f"`{id_col}`", seed)).alias("key"),
     )
     return keyed.orderBy(F.desc("key"), F.col(id_col)).limit(k)

@@ -30,15 +30,18 @@ def _qt(name: str) -> str:
     return f"`{name}`"
 
 
-def _distance_sql(qv: str, cv: str, metric: str) -> str:
-    """SQL-string twin of ``_distance`` (guide §7.3): one ``F.expr``
-    parse instead of ~170 py4j round-trips of Column-API fold
-    construction per distance tree. The strings spell the IDENTICAL
-    expression trees — per-element double casts inside the lambdas,
-    same operand order, ``0.0D`` for the double zero literal (a bare
-    SQL ``0.0`` parses as DECIMAL) — so fold arithmetic stays
-    bit-identical to the Column version and to the DuckDB oracle
-    (tests/test_knn_sql.py pins equality on all three metrics)."""
+def _distance(qv: str, cv: str, metric: str) -> str:
+    """Distance between two SQL array fragments, as SQL text for
+    ``F.expr`` (one JVM parse instead of ~170 py4j round-trips of
+    Column-API fold construction per distance tree).
+
+    Per-ELEMENT double casts inside the lambdas: callers pass raw
+    float arrays (an upfront array<double> cast would be inlined by
+    CollapseProject into the fold and re-cast the whole vector per
+    element), and the per-element cast keeps products/norms in double
+    precision so near-tie top-k rank boundaries agree with a
+    double-precision oracle. ``0.0D`` is the double zero literal (a
+    bare SQL ``0.0`` parses as DECIMAL)."""
     if metric == "sqeuclidean":
         return (
             f"aggregate(zip_with({qv}, {cv}, (a, b) -> "
@@ -66,46 +69,6 @@ def _distance_sql(qv: str, cv: str, metric: str) -> str:
     raise ValueError(f"metric must be one of {_METRICS}")
 
 
-def _distance(qv, cv, metric: str):
-    # Per-ELEMENT double casts inside the lambdas: callers pass raw
-    # float arrays (an upfront array<double> cast would be inlined by
-    # CollapseProject into the fold and re-cast the whole vector per
-    # element), and the per-element cast keeps products/norms in
-    # double precision so near-tie top-k rank boundaries agree with
-    # a double-precision oracle.
-    if metric == "sqeuclidean":
-        return F.aggregate(
-            F.zip_with(
-                qv,
-                cv,
-                lambda a, b: (a.cast("double") - b.cast("double"))
-                * (a.cast("double") - b.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    dot = F.aggregate(
-        F.zip_with(qv, cv, lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    if metric == "dot":
-        return -dot  # larger dot = nearer
-    if metric == "cosine":
-        nq = F.sqrt(
-            F.aggregate(
-                qv, F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double")
-            )
-        )
-        nc = F.sqrt(
-            F.aggregate(
-                cv, F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double")
-            )
-        )
-        return 1.0 - dot / (nq * nc)
-    raise ValueError(f"metric must be one of {_METRICS}")
-
-
 def knn_join(
     probes: DataFrame,
     candidates: DataFrame,
@@ -124,10 +87,10 @@ def knn_join(
     """
     from model_presto_spark.io import spread
 
-    # String-expression build throughout (guide §7.3): the Column-API
-    # construction of this plan cost ~770-1270 py4j round-trips per
-    # query build (q35/q45, measured with tools/py4j_count.py); the
-    # SQL strings parse JVM-side to the same Catalyst trees.
+    # String-expression build throughout (guide §7.3): building this
+    # plan with Column objects cost ~770-1270 py4j round-trips per
+    # query build (q35/q45, measured with tools/py4j_count.py); SQL
+    # text parses JVM-side in one round-trip per projection.
     p = probes.selectExpr(
         f"{_qt(probe_id)} AS __pid", f"{_qt(probe_vec)} AS __pvec"
     )
@@ -147,7 +110,7 @@ def knn_join(
     scored = pairs.selectExpr(
         "__pid",
         "__cid",
-        f"{_distance_sql('__pvec', '__cvec', metric)} AS __dist",
+        f"{_distance('__pvec', '__cvec', metric)} AS __dist",
     )
     return (
         scored.selectExpr(
@@ -215,7 +178,7 @@ def ivf_knn_join(
     pvec = F.col(probe_vec).cast("array<double>")
     p = probes.select(F.col(probe_id).alias("__pid"), pvec.alias("__pvec"))
     pc = p.crossJoin(F.broadcast(cent_df))
-    cdist = _distance(F.col("__pvec"), F.col("__centroid"), "sqeuclidean")
+    cdist = F.expr(_distance("__pvec", "__centroid", "sqeuclidean"))
     wcell = Window.partitionBy("__pid").orderBy(cdist.asc(), F.col("__cell").asc())
     probe_cells = (
         pc.withColumn("__crank", F.row_number().over(wcell))
@@ -227,7 +190,7 @@ def ivf_knn_join(
     pairs = probe_cells.join(indexed, "__cell")
     if exclude_self:
         pairs = pairs.filter(F.col("__pid") != F.col("__cid"))
-    dist = _distance(F.col("__pvec"), F.col("__cvec"), metric)
+    dist = F.expr(_distance("__pvec", "__cvec", metric))
     scored = pairs.select("__pid", "__cid", dist.alias("__dist")).dropDuplicates(
         ["__pid", "__cid"]
     )
@@ -359,7 +322,7 @@ def ann_lsh_join(
     pairs are scored. Recall < 1 by construction; raise ``planes``
     fan-out (multi-probe) or run multiple tables for higher recall.
     """
-    from model_presto_spark.functions.vectors import cosine_similarity_sql
+    from model_presto_spark.functions.vectors import cosine_similarity
     from model_presto_spark.io import spread
 
     # String-expression build (guide §7.3) — same Catalyst trees as
@@ -386,7 +349,7 @@ def ann_lsh_join(
     scored = pairs.selectExpr(
         "__pid",
         "__cid",
-        f"{cosine_similarity_sql('__pvec', '__cvec')} AS __sim",
+        f"{cosine_similarity('__pvec', '__cvec')} AS __sim",
     )
     return (
         scored.selectExpr(
@@ -473,7 +436,7 @@ def ivf_index_search(
     )
     pvec = F.col(probe_vec).cast("array<double>")
     p = probes.select(F.col(probe_id).alias("__pid"), pvec.alias("__pvec"))
-    cdist = _distance(F.col("__pvec"), F.col("centroid"), "sqeuclidean")
+    cdist = F.expr(_distance("__pvec", "centroid", "sqeuclidean"))
     wcell = Window.partitionBy("__pid").orderBy(cdist.asc(), F.col("cell").asc())
     probe_cells = (
         p.crossJoin(F.broadcast(cent_df))
@@ -486,7 +449,7 @@ def ivf_index_search(
     pairs = cells.join(F.broadcast(probe_cells), "cell")
     if exclude_self:
         pairs = pairs.filter(F.col("__pid") != F.col("cid"))
-    dist = _distance(F.col("__pvec"), F.col("cvec"), metric)
+    dist = F.expr(_distance("__pvec", "cvec", metric))
     scored = pairs.select("__pid", "cid", dist.alias("__dist")).dropDuplicates(
         ["__pid", "cid"]
     )
@@ -615,7 +578,7 @@ def ivf_index_append(
     )
     cvec = F.col(cand_vec).cast("array<double>")
     c = candidates.select(F.col(cand_id).alias("cid"), cvec.alias("cvec"))
-    d = _distance(F.col("cvec"), F.col("centroid"), "sqeuclidean")
+    d = F.expr(_distance("cvec", "centroid", "sqeuclidean"))
     w = Window.partitionBy("cid").orderBy(d.asc(), F.col("cell").asc())
     assigned = (
         c.crossJoin(F.broadcast(cent_df))

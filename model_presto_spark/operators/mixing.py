@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from model_presto_spark.functions.text import h60
+from model_presto_spark.functions.text import h60, sql_str
 
 _SCALE = 1_000_000
 
@@ -77,8 +77,8 @@ def apply_mix(
 ) -> DataFrame:
     """Keep each row iff its deterministic hash coin is under its
     source's keep_rate. The plan side is broadcast (#sources rows)."""
-    coin = h60(
-        F.concat(F.lit(salt + "#"), F.col(id_col).cast("string"))
+    coin = F.expr(
+        h60(f"concat({sql_str(salt + '#')}, CAST(`{id_col}` AS STRING))")
     ) % _SCALE
     thresh = F.floor(F.col("keep_rate") * _SCALE)
     return (
@@ -102,8 +102,8 @@ def apply_mix_epochs(
     (1-based copy index) lets downstream shuffling re-salt per copy
     so repeated documents don't co-locate. With rates <= 1 this
     degrades exactly to apply_mix (0 or 1 copies)."""
-    coin = h60(
-        F.concat(F.lit(salt + "#"), F.col(id_col).cast("string"))
+    coin = F.expr(
+        h60(f"concat({sql_str(salt + '#')}, CAST(`{id_col}` AS STRING))")
     ) % _SCALE
     rate = F.col("keep_rate")
     frac_thresh = F.floor((rate - F.floor(rate)) * _SCALE)

@@ -256,7 +256,7 @@ def token_divergence(
     # spread: tokenize+explode is pre-shuffle CPU (1-partition scans)
     tok = spread(docs).select(
         F.col(group_col).alias("grp"),
-        F.explode_outer(tokens(F.col(text_col))).alias("t"),
+        F.explode_outer(F.expr(tokens(f"`{text_col}`"))).alias("t"),
     ).filter(F.col("t").isNotNull())
     gc = tok.groupBy("grp", "t").agg(F.count(F.lit(1)).alias("c_g"))
     from pyspark import StorageLevel

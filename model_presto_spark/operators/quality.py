@@ -72,7 +72,7 @@ def gopher_quality_flags(
     base = spread(docs).select(
         id_col,
         F.col(text_col).alias("__t"),
-        tokens(F.col(text_col)).alias("__toks"),
+        F.expr(tokens(f"`{text_col}`")).alias("__toks"),
     )
     n = F.size("__toks").cast("double")
     # mean word length over token characters (whitespace excluded)
@@ -100,10 +100,10 @@ def gopher_quality_flags(
     alpha_frac = F.when(n > 0, alpha_words / n).otherwise(F.lit(0.0))
     stop_en = _lit_array(LANG_STOPWORDS["en"])
     stop_hits = F.size(
-        F.array_intersect(F.array_distinct("__toks"), stop_en)
+        F.array_intersect(F.array_distinct("__toks"), F.expr(stop_en))
     )
-    g2 = word_ngrams_all(F.col("__toks"), 2)
-    g3 = word_ngrams_all(F.col("__toks"), 3)
+    g2 = word_ngrams_all("__toks", 2)
+    g3 = word_ngrams_all("__toks", 3)
     staged = base.select(
         id_col,
         F.size("__toks").cast("bigint").alias("n_words"),
@@ -111,8 +111,8 @@ def gopher_quality_flags(
         _r6(sym_ratio).alias("symbol_ratio"),
         _r6(alpha_frac).alias("alpha_word_frac"),
         stop_hits.cast("bigint").alias("stop_hits"),
-        _r6(top_ngram_fraction(g2)).alias("top_2gram_frac"),
-        _r6(duplicate_ngram_fraction(g3)).alias("dup_3gram_frac"),
+        _r6(F.expr(top_ngram_fraction(g2))).alias("top_2gram_frac"),
+        _r6(F.expr(duplicate_ngram_fraction(g3))).alias("dup_3gram_frac"),
     )
     flags = staged.select(
         "*",

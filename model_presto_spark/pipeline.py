@@ -44,7 +44,7 @@ def _stage_normalize(cfg: dict) -> Callable[[DataFrame], DataFrame]:
     col = cfg.get("text_col", "text")
 
     def apply(df: DataFrame) -> DataFrame:
-        return df.withColumn(col, T.normalize_text(F.col(col)))
+        return df.withColumn(col, F.expr(T.normalize_text(f"`{col}`")))
 
     return apply
 
@@ -53,7 +53,7 @@ def _stage_scrub_pii(cfg: dict) -> Callable[[DataFrame], DataFrame]:
     col = cfg.get("text_col", "text")
 
     def apply(df: DataFrame) -> DataFrame:
-        return df.withColumn(col, T.scrub_pii(F.col(col)))
+        return df.withColumn(col, F.expr(T.scrub_pii(f"`{col}`")))
 
     return apply
 
@@ -66,15 +66,16 @@ def _stage_quality_gate(cfg: dict) -> Callable[[DataFrame], DataFrame]:
     min_stopword = cfg.get("min_stopword")
 
     def apply(df: DataFrame) -> DataFrame:
-        toksed = df.withColumn("__toks", T.tokens(F.col(col)))
-        feats = T.quality_features(F.col(col), F.col("__toks"))
-        cond = feats["n_tokens"] >= min_tokens
+        toksed = df.withColumn("__toks", F.expr(T.tokens(f"`{col}`")))
+        feats = T.quality_features(f"`{col}`", "__toks")
+        n_tok = F.expr(feats["n_tokens"])
+        cond = n_tok >= min_tokens
         if max_tokens is not None:
-            cond = cond & (feats["n_tokens"] <= max_tokens)
+            cond = cond & (n_tok <= max_tokens)
         if min_alpha is not None:
-            cond = cond & (feats["alpha_ratio"] >= min_alpha)
+            cond = cond & (F.expr(feats["alpha_ratio"]) >= min_alpha)
         if min_stopword is not None:
-            cond = cond & (feats["stopword_ratio"] >= min_stopword)
+            cond = cond & (F.expr(feats["stopword_ratio"]) >= min_stopword)
         return toksed.where(cond).drop("__toks")
 
     return apply
@@ -220,7 +221,7 @@ def _stage_token_budget(cfg: dict) -> Callable[[DataFrame], DataFrame]:
         )
 
         return token_budget_truncate(
-            df, source_col, id_col, T.token_count(F.col(col)), budget,
+            df, source_col, id_col, F.expr(T.token_count(f"`{col}`")), budget,
             cum_col="__cum",
         ).drop("__cum")
 
@@ -240,7 +241,7 @@ def _stage_domain_mix(cfg: dict) -> Callable[[DataFrame], DataFrame]:
             df,
             source_col,
             weight=F.lit(1.0),
-            token_count=T.token_count(F.col(col)),
+            token_count=F.expr(T.token_count(f"`{col}`")),
             budget_tokens=budget,
         )
         return apply_mix(df, plan, source_col, id_col)

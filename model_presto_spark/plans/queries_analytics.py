@@ -491,7 +491,7 @@ def q125(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     tf = (
-        docs.select(F.explode_outer(tokens(F.col("text"))).alias("token"))
+        docs.select(F.explode_outer(F.expr(tokens("text"))).alias("token"))
         .filter(F.col("token").isNotNull())
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))

@@ -382,7 +382,7 @@ def q157(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     tok = docs.select(
-        "doc_id", F.explode_outer(tokens(F.col("text"))).alias("term")
+        "doc_id", F.explode_outer(F.expr(tokens("text"))).alias("term")
     ).filter(F.col("term").isNotNull())
     tf = tok.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).cast("double").alias("tf")

@@ -304,7 +304,7 @@ def q162(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = orders.select(
         "o_totalprice",
         (
-            h60(F.concat(F.lit("boot#"), F.col("o_orderkey").cast("string")))
+            F.expr(h60("concat('boot#', CAST(o_orderkey AS STRING))"))
             % F.lit(_Q162_MP).cast("bigint")
         ).alias("hx"),
     )

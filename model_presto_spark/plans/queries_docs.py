@@ -340,11 +340,9 @@ def q36(spark: SparkSession, sf_dir: str) -> DataFrame:
     # String-expression build (guide §7.3; was ~610 py4j round-trips):
     # the nested when-chain is rendered as the same nested CASE tree.
     toksed = spread(docs.select("lang", "text")).selectExpr(
-        "lang", f"{T.tokens_sql('text')} AS toks"
+        "lang", f"{T.tokens('text')} AS toks"
     )
-    scores = {
-        lang: T.lang_score_sql("toks", lang) for lang in T.LANG_STOPWORDS
-    }
+    scores = T.lang_scores("toks")
     ordered = sorted(scores)  # lexicographic => deterministic argmax tie-break
     pred = None
     for lang in reversed(ordered):
@@ -400,13 +398,13 @@ def q37(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     # same single-file-scan serialization fix as q36 (io.spread)
-    # String-expression build (guide §7.3; was ~590 py4j round-trips):
-    # same trees as quality_features' Column forms, incl. the
-    # double-then-bigint n_tokens cast and the 0.0D else branches.
+    # String-expression build (guide §7.3; was ~590 py4j round-trips),
+    # incl. the double-then-bigint n_tokens cast and the 0.0D else
+    # branches.
     toksed = spread(docs.select("doc_id", "text")).selectExpr(
-        "doc_id", "text", f"{T.tokens_sql('text')} AS toks"
+        "doc_id", "text", f"{T.tokens('text')} AS toks"
     )
-    f = T.quality_features_sql("text", "toks")
+    f = T.quality_features("text", "toks")
     return toksed.selectExpr(
         "doc_id",
         f"CAST({f['n_tokens']} AS BIGINT) AS n_tokens",
@@ -446,8 +444,8 @@ def q38(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.select(
             "lang",
-            T.token_count(F.col("text")).alias("n_ws"),
-            T.bpe_ish_token_count(F.col("text")).alias("n_bpe"),
+            F.expr(T.token_count("text")).alias("n_ws"),
+            F.expr(T.bpe_ish_token_count("text")).alias("n_bpe"),
         )
         .groupBy("lang")
         .agg(
@@ -475,7 +473,7 @@ def q38(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q39(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    fp = T.fingerprint60(F.col("text"))
+    fp = F.expr(T.fingerprint60("text"))
     return docs.select("source", fp.alias("fp")).groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("fp").alias("n_unique"),

@@ -255,7 +255,7 @@ def _q56_oracle() -> str:
     "utm_forward) vs the same series spelled with exp/ln in DuckDB.",
 )
 def q56(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from model_presto_spark.functions.geo import utm_forward_sql
+    from model_presto_spark.functions.geo import utm_forward
 
     cust = _t(spark, sf_dir, "customer")
     pts = cust.select(
@@ -265,10 +265,10 @@ def q56(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(
         (F.col("lat") >= -80.0) & (F.col("lat") <= 84.0) & (F.col("c_custkey") < 600)
     )
-    # SQL-string twin of utm_forward: one py4j round-trip + JVM parse
-    # instead of ~1,459 round-trips of Column construction (~0.6 s per
-    # plan build) — bit-identical, pinned in tests/test_utm.py.
-    u = F.expr(utm_forward_sql("lat", "lon"))
+    # utm_forward is SQL text: one py4j round-trip + JVM parse instead
+    # of ~1,459 round-trips of Column construction (~0.6 s per plan
+    # build); the fragment is pinned against DuckDB in tests/test_utm.py.
+    u = F.expr(utm_forward("lat", "lon"))
     return pts.select(u.alias("u"), "c_custkey").select(
         "c_custkey",
         F.col("u.zone").alias("zone"),

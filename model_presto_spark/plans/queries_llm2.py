@@ -128,16 +128,16 @@ def q61(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CPU-bound and must not inherit the single-file scan's one
     # partition (the round-5 pathology #3; documents is 1 partition
     # at sf0.1)
-    toks = spread(docs).select("doc_id", tokens(F.col("text")).alias("__toks"))
+    toks = spread(docs).select("doc_id", F.expr(tokens("text")).alias("__toks"))
     grams = toks.select(
-        "doc_id", word_ngrams_all(F.col("__toks"), 2).alias("__grams")
+        "doc_id", F.expr(word_ngrams_all("__toks", 2)).alias("__grams")
     )
     return grams.select(
         "doc_id",
         F.round(
-            duplicate_ngram_fraction(F.col("__grams")) + 5e-12, 6
+            F.expr(duplicate_ngram_fraction("__grams")) + 5e-12, 6
         ).alias("dup_2gram_frac"),
-        F.round(top_ngram_fraction(F.col("__grams")) + 5e-12, 6).alias(
+        F.round(F.expr(top_ngram_fraction("__grams")) + 5e-12, 6).alias(
             "top_2gram_frac"
         ),
     )
@@ -177,7 +177,7 @@ def q62(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", "source", token_count(F.col("text")).alias("n_tokens")
+        "doc_id", "source", F.expr(token_count("text")).alias("n_tokens")
     )
     kept = token_budget_truncate(toks, "source", "doc_id", F.col("n_tokens"), 2000)
     return kept.select(

@@ -64,7 +64,7 @@ _Q66_ORACLE = f"""
 )
 def q66(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    toksed = docs.select("doc_id", T.tokens(F.col("text")).alias("toks"))
+    toksed = docs.select("doc_id", F.expr(T.tokens("text")).alias("toks"))
     n = F.size("toks")
     n_chunks = F.greatest(
         F.lit(1),
@@ -162,13 +162,15 @@ _Q67_ORACLE = f"""
 def q67(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     toksed = docs.select(
-        "doc_id", "text", T.tokens(F.col("text")).alias("toks")
+        "doc_id", "text", F.expr(T.tokens("text")).alias("toks")
     )
     base = toksed.select(
         "doc_id",
         "text",
         "toks",
-        T.h60(F.array_join(F.slice("toks", 1, _PREFIX_TOKS), " ")).alias("fp"),
+        F.expr(
+            T.h60(f"array_join(slice(toks, 1, {_PREFIX_TOKS}), ' ')")
+        ).alias("fp"),
     )
     # min-id representative per fingerprint: window-min beats a
     # groupBy+join re-attach (one shuffle, no second scan)
@@ -176,12 +178,12 @@ def q67(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     wmin = F.min("doc_id").over(Window.partitionBy("fp"))
     dedup = base.withColumn("__m", wmin).filter(F.col("doc_id") == F.col("__m"))
-    feats = T.quality_features(F.col("text"), F.col("toks"))
+    feats = T.quality_features("text", "toks")
     feat = dedup.select(
         "doc_id",
         F.size("toks").alias("n_tok"),
-        feats["alpha_ratio"].alias("alpha_ratio"),
-        feats["stopword_ratio"].alias("stop_ratio"),
+        F.expr(feats["alpha_ratio"]).alias("alpha_ratio"),
+        F.expr(feats["stopword_ratio"]).alias("stop_ratio"),
     )
 
     len_ok = F.col("n_tok").between(_MIN_TOK, _MAX_TOK)
@@ -259,7 +261,7 @@ def q70(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     tok = docs.select(
-        "source", "doc_id", F.size(T.tokens(F.col("text"))).alias("n_tok")
+        "source", "doc_id", F.size(F.expr(T.tokens("text"))).alias("n_tok")
     )
     w = F.when(
         F.expr("CAST(substring(source, 4) AS INT)") % 2 == 0, F.lit(2.0)
@@ -452,7 +454,7 @@ def q74(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     lens = docs.select(
-        "doc_id", F.size(T.tokens(F.col("text"))).alias("n_tok")
+        "doc_id", F.size(F.expr(T.tokens("text"))).alias("n_tok")
     )
     packed = pack_sequences(lens, "n_tok", _Q74_L)
     return packed.groupBy("bin_id").agg(
@@ -567,7 +569,7 @@ def q82(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     tok = docs.select(
-        "source", "doc_id", F.size(T.tokens(F.col("text"))).alias("n_tok")
+        "source", "doc_id", F.size(F.expr(T.tokens("text"))).alias("n_tok")
     )
     w = F.when(
         F.expr("CAST(substring(source, 4) AS INT)") % 2 == 0, F.lit(2.0)

@@ -167,12 +167,12 @@ def q170(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     toksed = docs.select(
-        "doc_id", "source", tokens(F.col("text")).alias("toks")
+        "doc_id", "source", F.expr(tokens("text")).alias("toks")
     )
     g = toksed.select(
         "doc_id",
         "source",
-        F.array_distinct(hash_array(word_ngrams(F.col("toks"), 3))).alias(
+        F.array_distinct(F.expr(hash_array(word_ngrams("toks", 3)))).alias(
             "grams"
         ),
     )

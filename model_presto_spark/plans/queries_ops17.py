@@ -78,7 +78,7 @@ def q266(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     src = (
         docs.select(
-            "source", F.size(tokens(F.col("text"))).alias("n_tok")
+            "source", F.size(F.expr(tokens("text"))).alias("n_tok")
         )
         .groupBy("source")
         .agg(F.sum("n_tok").cast("bigint").alias("n_s"))

@@ -393,7 +393,7 @@ def q274(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id",
         "source",
-        F.explode_outer(tokens(F.col("text"))).alias("w"),
+        F.explode_outer(F.expr(tokens("text"))).alias("w"),
     ).where(F.col("w").isNotNull())
     dw = tok.groupBy("doc_id", "source", "w").agg(
         F.count(F.lit(1)).alias("c")

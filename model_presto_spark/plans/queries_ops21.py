@@ -666,7 +666,7 @@ def q290(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     n_pos = (
         F.when(F.col("n_chars") > 600, 1).otherwise(0)
-        + F.when(F.size(tokens(F.col("text"))) > 95, 1).otherwise(0)
+        + F.when(F.size(F.expr(tokens("text"))) > 95, 1).otherwise(0)
         + F.when(F.lower(F.col("text")).like("% the %"), 1).otherwise(0)
     )
     item = docs.select(n_pos.alias("n_pos")).select(

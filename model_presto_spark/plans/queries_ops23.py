@@ -82,8 +82,8 @@ def q296(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     big = (
-        docs.select(tokens(F.col("text")).alias("ts"))
-        .select(F.explode_outer(bigrams(F.col("ts"))).alias("bg"))
+        docs.select(F.expr(tokens("text")).alias("ts"))
+        .select(F.explode_outer(F.expr(bigrams("ts"))).alias("bg"))
         .where(F.col("bg").isNotNull())
         .select(
             F.split(F.col("bg"), " ")[0].alias("w1"),
@@ -181,7 +181,7 @@ def q297(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     d = docs.select(
-        F.size(tokens(F.col("text"))).cast("bigint").alias("n_tok")
+        F.size(F.expr(tokens("text"))).cast("bigint").alias("n_tok")
     ).where(F.col("n_tok") >= _Q297_SPAN)
     n_spans = F.greatest(
         F.expr(
@@ -282,10 +282,10 @@ def q298(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
-        F.size(F.array_distinct(tokens(F.col("text"))))
+        F.size(F.array_distinct(F.expr(tokens("text"))))
         .cast("bigint")
         .alias("val"),
-        F.size(tokens(F.col("text"))).cast("bigint").alias("cost"),
+        F.size(F.expr(tokens("text"))).cast("bigint").alias("cost"),
     )
     tot = d.agg(
         F.floor(0.3 * F.sum("cost")).cast("bigint").alias("budget")

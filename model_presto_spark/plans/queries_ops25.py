@@ -488,7 +488,7 @@ def q310(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
         docs.where(F.col("source").isin(*_Q310_SRCS))
         .select(
-            "source", F.explode_outer(tokens(F.col("text"))).alias("w")
+            "source", F.explode_outer(F.expr(tokens("text"))).alias("w")
         )
         .where(F.col("w").isNotNull())
     )

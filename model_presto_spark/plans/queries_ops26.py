@@ -270,7 +270,7 @@ def q313(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     tok = docs.select(
-        "source", F.explode_outer(tokens(F.col("text"))).alias("w")
+        "source", F.explode_outer(F.expr(tokens("text"))).alias("w")
     ).where(F.col("w").isNotNull())
     wc = tok.groupBy("source", "w").agg(
         F.count(F.lit(1)).alias("c")
@@ -406,7 +406,7 @@ def q314(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     grams = low.select(
         F.explode_outer(
-            char_shingles(F.col("lt"), k=_Q314_K, distinct=False)
+            F.expr(char_shingles("lt", k=_Q314_K, distinct=False))
         ).alias("gram")
     ).where(F.col("gram").isNotNull())
     cnt = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("freq"))

@@ -87,7 +87,7 @@ def q319(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     tok = docs.select(
-        "source", F.explode_outer(tokens(F.col("text"))).alias("w")
+        "source", F.explode_outer(F.expr(tokens("text"))).alias("w")
     ).where(F.col("w").isNotNull())
     wc = tok.groupBy("source", "w").agg(
         F.count(F.lit(1)).alias("c")

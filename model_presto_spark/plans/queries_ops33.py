@@ -120,7 +120,7 @@ def q360(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _t(spark, sf_dir, "events")
     uu = (
-        h60(F.concat(F.lit("trt#"), F.col("event_id").cast("string")))
+        F.expr(h60("concat('trt#', CAST(event_id AS STRING))"))
         / F.lit(_H60_MAX)
     )
     thr = F.when(F.col("event_type").isin("click", "view"), 0.7).otherwise(0.3)

@@ -268,7 +268,7 @@ def q371(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", F.explode_outer(T.tokens(F.col("text"))).alias("token")
+        "doc_id", F.explode_outer(F.expr(T.tokens("text"))).alias("token")
     ).filter(F.col("token").isNotNull())
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     dlen = tf.groupBy(F.col("doc_id").alias("d_doc")).agg(

@@ -100,11 +100,11 @@ def q374(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _t(spark, sf_dir, "events")
     lat = (
-        h60(F.concat(F.lit("lat#"), F.col("event_id").cast("string")))
+        F.expr(h60("concat('lat#', CAST(event_id AS STRING))"))
         / F.lit(_H60_MAX)
     ) * 10 + 40
     lon = (
-        h60(F.concat(F.lit("lon#"), F.col("event_id").cast("string")))
+        F.expr(h60("concat('lon#', CAST(event_id AS STRING))"))
         / F.lit(_H60_MAX)
     ) * 10 - 5
     pts = ev.select(
@@ -451,7 +451,7 @@ def q378(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     tf = docs.select(
-        "source", F.explode_outer(T.tokens(F.col("text"))).alias("tok")
+        "source", F.explode_outer(F.expr(T.tokens("text"))).alias("tok")
     ).filter(F.col("tok").isNotNull())
     cnt = tf.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
     tot = cnt.groupBy(F.col("source").alias("t_src")).agg(

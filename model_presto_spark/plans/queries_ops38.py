@@ -233,7 +233,7 @@ def q386(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     cnt = docs.select(
-        F.explode_outer(T.tokens(F.col("text"))).alias("tok")
+        F.explode_outer(F.expr(T.tokens("text"))).alias("tok")
     ).filter(F.col("tok").isNotNull()).groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     w = Window.orderBy(F.col("c").desc(), "tok")
     ranked = cnt.select(
@@ -292,7 +292,7 @@ def q387(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     base = ev.select(
         (
-            h60(F.concat(F.lit("cv#"), F.col("event_id").cast("string"))) % 5
+            F.expr(h60("concat('cv#', CAST(event_id AS STRING))")) % 5
         ).alias("fold"),
         F.when(F.col("value") > 50, 1).otherwise(0).alias("pred"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),

@@ -181,7 +181,7 @@ def q391(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     base = ev.select(
         (
-            h60(F.concat(F.lit("lc#"), F.col("event_id").cast("string")))
+            F.expr(h60("concat('lc#', CAST(event_id AS STRING))"))
             / F.lit(_H60_MAX)
         ).alias("u"),
         F.when(F.col("value") > 50, 1).otherwise(0).alias("pred"),

@@ -257,7 +257,7 @@ def q190(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     clean = pipe.run(docs)
     toks = clean.select(
-        "source", "doc_id", token_count(F.col("text")).alias("n_tok")
+        "source", "doc_id", F.expr(token_count("text")).alias("n_tok")
     )
     from pyspark.sql import Window
 

@@ -314,7 +314,7 @@ def q398(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     t = docs.select(
-        "source", F.size(T.tokens(F.col("text"))).alias("n_tok")
+        "source", F.size(F.expr(T.tokens("text"))).alias("n_tok")
     )
     lost = F.greatest(F.col("n_tok") - _Q398_LEN, F.lit(0))
     return (

@@ -62,7 +62,7 @@ def q399(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("bigint").alias("y"),
         (
-            h60(F.concat(F.lit("aqp#"), F.col("event_id").cast("string")))
+            F.expr(h60("concat('aqp#', CAST(event_id AS STRING))"))
             / F.lit(_H60_MAX)
         ).alias("u"),
     )
@@ -235,7 +235,7 @@ def q401(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys.crossJoin(F.broadcast(hidx))
         .select(
             (
-                h60(F.concat(F.col("k"), F.lit("#"), F.col("i").cast("string")))
+                F.expr(h60("concat(k, '#', CAST(i AS STRING))"))
                 % _Q401_M
             ).alias("bit")
         )
@@ -250,7 +250,7 @@ def q401(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "truth",
         (
-            h60(F.concat(F.col("k"), F.lit("#"), F.col("i").cast("string")))
+            F.expr(h60("concat(k, '#', CAST(i AS STRING))"))
             % _Q401_M
         ).alias("pbit"),
     )

@@ -68,9 +68,9 @@ def q404(spark: SparkSession, sf_dir: str) -> DataFrame:
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     pts = ev.select(
         "user_id",
-        (h60(F.concat(F.lit("lat#"), F.col("event_id").cast("string"))) % 16)
+        (F.expr(h60("concat('lat#', CAST(event_id AS STRING))")) % 16)
         .alias("cx"),
-        (h60(F.concat(F.lit("lon#"), F.col("event_id").cast("string"))) % 16)
+        (F.expr(h60("concat('lon#', CAST(event_id AS STRING))")) % 16)
         .alias("cy"),
         F.floor(us / 3600000000.0).cast("bigint").alias("tw"),
     )
@@ -191,12 +191,10 @@ def q405(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def coin(tag: str) -> F.Column:
         return (
-            h60(
-                F.concat(
-                    F.lit(tag),
-                    F.col("u").cast("string"),
-                    F.lit(">"),
-                    F.col("v").cast("string"),
+            F.expr(
+                h60(
+                    f"concat('{tag}', CAST(u AS STRING), '>', "
+                    f"CAST(v AS STRING))"
                 )
             )
             / F.lit(1152921504606846976.0)
@@ -458,9 +456,9 @@ def q408(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = orig.unionByName(copy1).unionByName(copy2)
     clustered = corpus.select(
         "family",
-        T.h60(F.array_join(F.slice(T.tokens(F.col("text")), 1, 12), " ")).alias(
-            "cluster"
-        ),
+        F.expr(
+            T.h60(f"array_join(slice({T.tokens('text')}, 1, 12), ' ')")
+        ).alias("cluster"),
     )
     cont = clustered.groupBy("cluster", "family").agg(
         F.count(F.lit(1)).alias("n_ct")

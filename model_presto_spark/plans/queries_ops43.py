@@ -168,21 +168,21 @@ def q410(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.functions import text as T
 
     s = _t(spark, sf_dir, "supplier")
-    spaced = F.replace(F.col("s_name"), F.lit("#"), F.lit(" "))
+    spaced = "replace(s_name, '#', ' ')"
     corrupted = s.select(
         F.col("s_suppkey").alias("true_key"),
         F.col("s_nationkey").alias("rec_nat"),
-        F.array_join(F.reverse(T.tokens(spaced)), " ").alias("rec_name"),
+        F.array_join(F.reverse(F.expr(T.tokens(spaced))), " ").alias("rec_name"),
     )
     cand = corrupted.join(
         F.broadcast(s), F.col("rec_nat") == F.col("s_nationkey")
     ).select(
         "true_key",
         F.col("s_suppkey").alias("cand_key"),
-        F.levenshtein(F.col("rec_name"), F.lower(spaced)).alias("lev_raw"),
+        F.levenshtein(F.col("rec_name"), F.expr(f"lower({spaced})")).alias("lev_raw"),
         F.levenshtein(
-            F.array_join(F.array_sort(T.tokens(F.col("rec_name"))), " "),
-            F.array_join(F.array_sort(T.tokens(spaced)), " "),
+            F.array_join(F.array_sort(F.expr(T.tokens("rec_name"))), " "),
+            F.array_join(F.array_sort(F.expr(T.tokens(spaced))), " "),
         ).alias("lev_sorted"),
     )
     wr = Window.partitionBy("true_key").orderBy("lev_raw", "cand_key")
@@ -270,7 +270,7 @@ def q411(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     base = ev.select(
         (
-            h60(F.concat(F.lit("mg#"), F.col("event_id").cast("string"))) % 2
+            F.expr(h60("concat('mg#', CAST(event_id AS STRING))")) % 2
         ).alias("part"),
         F.round(F.col("value") * 100).cast("bigint").alias("x"),
         F.length("props").cast("bigint").alias("y"),
@@ -425,11 +425,11 @@ def q412(spark: SparkSession, sf_dir: str) -> DataFrame:
     picks = seeds.crossJoin(F.broadcast(nmax)).select(
         "s",
         (
-            h60(F.concat(F.lit("ra#"), F.col("s").cast("string"))) % F.col("nn")
+            F.expr(h60("concat('ra#', CAST(s AS STRING))")) % F.col("nn")
             + 1
         ).alias("r1"),
         (
-            h60(F.concat(F.lit("rb#"), F.col("s").cast("string"))) % F.col("nn")
+            F.expr(h60("concat('rb#', CAST(s AS STRING))")) % F.col("nn")
             + 1
         ).alias("r2"),
     )

@@ -230,7 +230,7 @@ def q196(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         F.pmod(
-            h60(F.concat(F.lit("ip#"), F.col("user_id").cast("string"))),
+            F.expr(h60("concat('ip#', CAST(user_id AS STRING))")),
             F.lit(4294967296),
         ).alias("ip"),
     )

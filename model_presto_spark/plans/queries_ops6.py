@@ -476,7 +476,7 @@ def q204(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.functions.text import h60
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    h = h60(F.concat(F.lit("doc#"), F.col("doc_id").cast("string")))
+    h = F.expr(h60("concat('doc#', CAST(doc_id AS STRING))"))
     assigned = docs.select(
         _spark_ring_pick(_Q204_VH8, _Q204_SH8, h).alias("shard8"),
         _spark_ring_pick(_Q204_VH9, _Q204_SH9, h).alias("shard9"),
@@ -591,7 +591,7 @@ def q205(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rk = F.row_number().over(
         Window.partitionBy("source").orderBy(
-            h60(F.concat(F.lit("ney#"), F.col("doc_id").cast("string"))),
+            F.expr(h60("concat('ney#', CAST(doc_id AS STRING))")),
             F.col("doc_id"),
         )
     )

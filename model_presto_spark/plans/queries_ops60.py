@@ -110,14 +110,16 @@ def q494(spark: SparkSession, sf_dir: str) -> DataFrame:
         spread(docs)
         .select(
             F.col("doc_id").alias("id"),
-            hash_array(char_shingles(F.lower(F.col("text")), 5)).alias("hs"),
+            F.expr(hash_array(char_shingles("lower(text)", 5))).alias("hs"),
         )
         # lineage cut: the shingle relation feeds the signature plus
         # both verify sides across three band configs (plan audit: 25
         # scans with persist-only lineage)
         .localCheckpoint(eager=False)
     )
-    sig = sh.select("id", minhash_signature(F.col("hs"), 16).alias("sig")).localCheckpoint(eager=False)
+    sig = sh.select(
+        "id", F.expr(minhash_signature("hs", 16)).alias("sig")
+    ).localCheckpoint(eager=False)
     hs_a = sh.select(F.col("id").alias("id_a"), F.col("hs").alias("ha"))
     hs_b = sh.select(F.col("id").alias("id_b"), F.col("hs").alias("hb"))
     # All three band configs ride ONE banded relation keyed by the
@@ -137,7 +139,7 @@ def q494(spark: SparkSession, sf_dir: str) -> DataFrame:
         bb = sig.select(
             F.lit(b).alias("bands"),
             "id",
-            F.explode_outer(lsh_band_keys(F.col("sig"), b, r)).alias("bk"),
+            F.explode_outer(F.expr(lsh_band_keys("sig", b, r))).alias("bk"),
         ).select(
             "bands",
             F.col("bk.band").alias("band"),

@@ -71,7 +71,7 @@ def q209(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("double").alias("y"),
     )
     variant = F.pmod(
-        h60(F.concat(F.lit("ab#"), F.col("user_id").cast("string"))),
+        F.expr(h60("concat('ab#', CAST(user_id AS STRING))")),
         F.lit(2),
     ).alias("variant")
     n = F.count(F.lit(1))
@@ -178,7 +178,7 @@ def q210(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.pmod(
-                h60(F.concat(F.lit("ab#"), F.col("user_id").cast("string"))),
+                F.expr(h60("concat('ab#', CAST(user_id AS STRING))")),
                 F.lit(2),
             ).alias("variant"),
             "x",
@@ -341,8 +341,8 @@ def q212(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     tc = (
-        docs.select(tokens(F.col("text")).alias("ts"))
-        .select(F.explode_outer(bigrams(F.col("ts"))).alias("t"))
+        docs.select(F.expr(tokens("text")).alias("ts"))
+        .select(F.explode_outer(F.expr(bigrams("ts"))).alias("t"))
         .where(F.col("t").isNotNull())
         .groupBy("t")
         .agg(F.count(F.lit(1)).alias("r"))
@@ -433,9 +433,9 @@ def q213(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     tc = (
-        docs.select("source", tokens(F.col("text")).alias("ts"))
+        docs.select("source", F.expr(tokens("text")).alias("ts"))
         .select(
-            "source", F.explode_outer(bigrams(F.col("ts"))).alias("t")
+            "source", F.explode_outer(F.expr(bigrams("ts"))).alias("t")
         )
         .where(F.col("t").isNotNull())
         .groupBy("source", "t")

@@ -78,8 +78,8 @@ def q225(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     big = (
-        docs.select("doc_id", tokens(F.col("text")).alias("ts"))
-        .select("doc_id", F.explode_outer(bigrams(F.col("ts"))).alias("t"))
+        docs.select("doc_id", F.expr(tokens("text")).alias("ts"))
+        .select("doc_id", F.explode_outer(F.expr(bigrams("ts"))).alias("t"))
         .where(F.col("t").isNotNull())
     )
     big = big.localCheckpoint(eager=False)  # feeds n_tok AND first_occ
@@ -454,7 +454,7 @@ def q229(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     ra = F.when(F.col("n_chars") > _Q229_CHARS, 1).otherwise(0)
     rb = F.when(
-        F.size(tokens(F.col("text"))) > _Q229_WORDS, 1
+        F.size(F.expr(tokens("text"))) > _Q229_WORDS, 1
     ).otherwise(0)
     r = docs.select(ra.alias("ra"), rb.alias("rb"))
     tab = r.agg(

@@ -226,7 +226,7 @@ def q166(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     ev_us = _epoch_us("ts")
     arr_us = ev_us + (
-        h60(F.concat(F.lit("late#"), F.col("event_id").cast("string"))) % 3600
+        F.expr(h60("concat('late#', CAST(event_id AS STRING))")) % 3600
     ) * F.lit(1_000_000).cast("bigint")
     arr = ev.select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"),

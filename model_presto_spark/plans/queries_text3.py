@@ -56,13 +56,13 @@ def q130(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.functions.text import charclass_counts
 
     docs = _t(spark, sf_dir, "documents")
-    cc = charclass_counts(F.col("text"))
+    cc = charclass_counts("text")
     per = docs.select(
         "source",
-        cc["upper_ratio"].alias("ur"),
-        cc["digit_ratio"].alias("dr"),
-        cc["punct_ratio"].alias("pr"),
-        cc["space_ratio"].alias("sr"),
+        F.expr(cc["upper_ratio"]).alias("ur"),
+        F.expr(cc["digit_ratio"]).alias("dr"),
+        F.expr(cc["punct_ratio"]).alias("pr"),
+        F.expr(cc["space_ratio"]).alias("sr"),
     )
     return per.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -113,11 +113,11 @@ def q131(spark: SparkSession, sf_dir: str) -> DataFrame:
     from model_presto_spark.functions.text import readability_features
 
     docs = _t(spark, sf_dir, "documents")
-    rf = readability_features(F.col("text"))
+    rf = readability_features("text")
     per = docs.select(
         "source",
-        rf["n_words"].alias("w"),
-        rf["flesch"].alias("flesch"),
+        F.expr(rf["n_words"]).alias("w"),
+        F.expr(rf["flesch"]).alias("flesch"),
     )
     return per.groupBy("source").agg(
         F.sum("w").alias("total_words"),

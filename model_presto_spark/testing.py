@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import decimal
 import math
 import os
 
@@ -11,17 +12,24 @@ from model_presto_spark.io import TABLES, table_path
 
 
 def canon(v) -> str:
-    """Canonical string for one cell (order-insensitive hashing)."""
+    """Type-sensitive canonical string for one cell (order-insensitive
+    hashing). A hash of Arrow values tells a DuckDB decimal128 SUM from
+    a Spark BIGINT even when the numbers are equal, so every value
+    carries a type tag."""
     if v is None:
         return "NULL"
+    if isinstance(v, bool):
+        return "b:" + str(int(v))
+    if isinstance(v, decimal.Decimal):
+        return "dec:" + str(v)
     if isinstance(v, float):
         if math.isnan(v):
-            return "NaN"
+            return "f:NaN"
         if v == int(v) and abs(v) < 1e15:
-            return str(int(v))
-        return repr(v)
-    if isinstance(v, bool):
-        return str(int(v))
+            return "f:" + str(int(v))
+        return "f:" + repr(v)
+    if isinstance(v, int):
+        return "i:" + str(v)
     return str(v)
 
 
@@ -57,6 +65,38 @@ def compare_query(spark, con, spec, sf_dir: str) -> list[str]:
         sm = rows_to_multiset(scols, srows)
         om = rows_to_multiset(ocols, ores)
         if sm != om:
-            diffs = [(a, b) for a, b in zip(sm, om) if a != b][:3]
-            problems.append(f"values differ, first diffs: {diffs}")
+            diffs = [(a, b) for a, b in zip(sm, om) if a != b]
+            problems.append(
+                f"values differ ({len(diffs)} rows), first: {diffs[:2]}"
+            )
     return problems
+
+
+def _plain(v):
+    """Engine value -> plain Python: structs (Spark Row, DuckDB dict)
+    become tuples, NaN becomes the string "NaN" so it compares equal."""
+    if isinstance(v, dict):
+        return tuple(_plain(x) for x in v.values())
+    if isinstance(v, tuple):  # pyspark Row
+        return tuple(_plain(x) for x in v)
+    if isinstance(v, list):
+        return [_plain(x) for x in v]
+    if isinstance(v, float) and math.isnan(v):
+        return "NaN"
+    return v
+
+
+def eval_fragments(df, spark_sql: str, duck_sql: str, key: str = "id"):
+    """Evaluate one expression per row of ``df`` in both engines: the
+    Spark SQL fragment over ``df``, the DuckDB fragment over the same
+    rows handed over as Arrow (table ``t``). Returns two
+    ``{key: value}`` dicts of plain Python values (see ``_plain``)."""
+    con = duckdb.connect()
+    con.register("t", df.toArrow())
+    spark_rows = df.selectExpr(key, f"{spark_sql} AS v").collect()
+    duck_rows = con.execute(f"SELECT {key}, {duck_sql} AS v FROM t").fetchall()
+    con.close()
+    return (
+        {r[0]: _plain(r[1]) for r in spark_rows},
+        {r[0]: _plain(r[1]) for r in duck_rows},
+    )

@@ -26,7 +26,7 @@ def test_batch_core_in_batch_and_store_dedup(spark):
         ],
     )
     store = _wave(spark, [(99, "seen before")]).select(
-        fingerprint60(F.col("text")).alias("fingerprint")
+        F.expr(fingerprint60("text")).alias("fingerprint")
     )
     out = dedup_batch_against_store(batch, store, "doc_id", "text")
     assert sorted(r["doc_id"] for r in out.collect()) == [1, 3]
@@ -136,7 +136,7 @@ def test_boilerplate_batch_core_running_frequency(spark):
     ledger = spark.createDataFrame(
         [("cookie banner", 3)], "line string, doc_freq long"
     ).select(
-        h60_fast(F.col("line")).alias("lhash"), "doc_freq"
+        F.expr(h60_fast("line")).alias("lhash"), "doc_freq"
     )
     scrubbed, deltas = scrub_batch_against_ledger(
         batch, ledger, min_doc_freq=5

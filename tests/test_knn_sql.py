@@ -1,13 +1,14 @@
-"""Pin the SQL-string-built knn family to Column-built references.
+"""Pin the knn family's SQL distance folds against DuckDB spellings.
 
-Round-9 rewrote knn_join / knn_classify / ann_lsh_join's expression
-construction as SQL strings parsed JVM-side (guide §7.3: the Column
-API cost 766-1274 py4j round-trips per q35/q45 build). The plan-node
-structure is unchanged (plans/r09/q{23,35,40,45}_* diff clean modulo
-exprIds) and q23/q35/q40/q45 + the non-bench knn consumers hash-match
-the oracle at all three SFs; this test additionally pins BIT-equality
-of the distance folds against the former Column-by-Column trees on
-float32 vectors (where a changed cast/operand order would show).
+knn_join / knn_classify / ann_lsh_join build their expressions as SQL
+text parsed JVM-side (guide §7.3: Column construction cost 766-1274
+py4j round-trips per q35/q45 build). The distance folds are pinned
+against the DuckDB spellings of the oracles that replay them (q45's
+squared L2, q35's dot and norms) on float32 vectors, element-wise with
+no tolerance: a changed cast or operand order shows in the last bit.
+The rows include a zero vector, NaN and ±inf elements. The knn_join
+and ann_lsh_join results are pinned against a reference plan built
+directly from the same folds.
 """
 
 from __future__ import annotations
@@ -17,10 +18,13 @@ from pyspark.sql import functions as F
 
 from model_presto_spark.operators.knn import (
     _distance,
-    _distance_sql,
     ann_lsh_join,
     knn_join,
 )
+from model_presto_spark.testing import eval_fragments
+
+_DIM = 16
+_ZERO = 200  # id of the all-zero vector
 
 
 @pytest.fixture(scope="module")
@@ -29,25 +33,95 @@ def vecs(spark):
 
     rnd = random.Random(7)
     rows = [
-        (i, [rnd.uniform(-1, 1) for _ in range(16)]) for i in range(40)
+        (i, [rnd.uniform(-1, 1) for _ in range(_DIM)]) for i in range(40)
     ]
     # near-duplicate rows to force distance ties at the rank boundary
     rows += [(100 + i, list(rows[i][1])) for i in range(4)]
     return spark.createDataFrame(rows, "id INT, vec ARRAY<FLOAT>")
 
 
-@pytest.mark.parametrize("metric", ["sqeuclidean", "cosine", "dot"])
-def test_distance_sql_bit_identical(spark, vecs, metric):
-    pairs = vecs.alias("a").crossJoin(
-        vecs.toDF("id2", "vec2").alias("b")
-    ).limit(400)
-    both = pairs.select(
-        _distance(F.col("vec"), F.col("vec2"), metric).alias("col_built"),
-        F.expr(_distance_sql("vec", "vec2", metric)).alias("sql_built"),
+@pytest.fixture(scope="module")
+def odd_pairs(spark, vecs):
+    """Every ordered pair over a few random vectors plus the degenerate
+    ones: all zeros, a NaN element, +inf and -inf elements."""
+    base = [(r.id, list(r.vec)) for r in vecs.where("id < 4").collect()]
+    odd = [
+        (_ZERO, [0.0] * _DIM),
+        (201, [float("nan")] + [0.5] * (_DIM - 1)),
+        (202, [float("inf")] + [0.5] * (_DIM - 1)),
+        (203, [float("-inf")] + [0.5] * (_DIM - 1)),
+    ]
+    rows = [
+        (ia * 1000 + ib, va, vb) for ia, va in base + odd for ib, vb in base + odd
+    ]
+    return spark.createDataFrame(
+        rows, "id INT, vec ARRAY<FLOAT>, vec2 ARRAY<FLOAT>"
     )
-    # bit-equality: no tolerance
-    bad = both.where("col_built IS DISTINCT FROM sql_built").count()
-    assert bad == 0
+
+
+# q45's squared-L2 and q35's dot / norm spellings
+_DD_SQDIST = (
+    f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+    f"list_transform(generate_series(1, {_DIM}), "
+    f"i -> (CAST(vec[i] AS DOUBLE) - CAST(vec2[i] AS DOUBLE)) "
+    f"* (CAST(vec[i] AS DOUBLE) - CAST(vec2[i] AS DOUBLE)))), "
+    f"(acc, x) -> acc + x)"
+)
+_DD_DOT = (
+    f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+    f"list_transform(generate_series(1, {_DIM}), "
+    f"i -> CAST(vec[i] AS DOUBLE) * CAST(vec2[i] AS DOUBLE))), "
+    f"(acc, x) -> acc + x)"
+)
+
+
+def _dd_norm(a: str) -> str:
+    return (
+        f"sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+        f"list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), "
+        f"(acc, x) -> acc + x))"
+    )
+
+
+_DD_DISTANCE = {
+    "sqeuclidean": _DD_SQDIST,
+    "dot": f"-({_DD_DOT})",
+    "cosine": f"1.0 - {_DD_DOT} / ({_dd_norm('vec')} * {_dd_norm('vec2')})",
+}
+
+
+@pytest.mark.parametrize("metric", ["sqeuclidean", "cosine", "dot"])
+def test_distance_sql_bit_identical(spark, odd_pairs, metric):
+    if metric == "cosine":
+        # a zero vector makes the cosine 0/0: DuckDB returns NULL, Spark
+        # under ANSI raises (ROADMAP defect), so those pairs are checked
+        # apart below
+        zero = f"id DIV 1000 = {_ZERO} OR id % 1000 = {_ZERO}"
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            odd_pairs.where(zero).selectExpr(
+                _distance("vec", "vec2", metric)
+            ).collect()
+        odd_pairs = odd_pairs.where(f"NOT ({zero})")
+    got, want = eval_fragments(
+        odd_pairs, _distance("vec", "vec2", metric), _DD_DISTANCE[metric]
+    )
+    assert got == want  # bit-equality: no tolerance
+
+
+def test_cosine_similarity_twin(spark, odd_pairs):
+    from model_presto_spark.functions.vectors import cosine_similarity
+
+    zero = f"id DIV 1000 = {_ZERO} OR id % 1000 = {_ZERO}"
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):  # as above
+        odd_pairs.where(zero).selectExpr(
+            cosine_similarity("vec", "vec2")
+        ).collect()
+    got, want = eval_fragments(
+        odd_pairs.where(f"NOT ({zero})"),
+        cosine_similarity("vec", "vec2"),
+        f"{_DD_DOT} / ({_dd_norm('vec')} * {_dd_norm('vec2')})",
+    )
+    assert got == want
 
 
 @pytest.mark.parametrize("metric", ["sqeuclidean", "cosine", "dot"])
@@ -60,11 +134,11 @@ def test_knn_join_matches_reference(spark, vecs, metric):
         probes, cands, "probe_id", "cid", "vec", "vec",
         k=3, metric=metric, exclude_self=True,
     )
-    # reference: the pre-round-9 Column-built plan, verbatim
+    # reference: the same fold under a plain window plan
     p = probes.select(F.col("probe_id").alias("__pid"), F.col("vec").alias("__pvec"))
     c = cands.select(F.col("cid").alias("__cid"), F.col("vec").alias("__cvec"))
     pairs = c.crossJoin(F.broadcast(p)).filter(F.col("__pid") != F.col("__cid"))
-    dist = _distance(F.col("__pvec"), F.col("__cvec"), metric)
+    dist = F.expr(_distance("__pvec", "__cvec", metric))
     scored = pairs.select("__pid", "__cid", dist.alias("__dist"))
     w = Window.partitionBy("__pid").orderBy(
         F.col("__dist").asc(), F.col("__cid").asc()
@@ -107,7 +181,7 @@ def test_ann_lsh_join_matches_reference(spark, vecs):
         F.expr(_hyperplane_bucket_sql("__cvec", 16, 4)).alias("__bucket"),
     )
     pairs = c.join(p, "__bucket").filter(F.col("__pid") != F.col("__cid"))
-    sim = cosine_similarity(F.col("__pvec"), F.col("__cvec"))
+    sim = F.expr(cosine_similarity("__pvec", "__cvec"))
     scored = pairs.select("__pid", "__cid", sim.alias("__sim"))
     w = Window.partitionBy("__pid").orderBy(
         F.col("__sim").desc(), F.col("__cid").asc()

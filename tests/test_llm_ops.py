@@ -65,14 +65,14 @@ def test_repetition_signals(spark):
         "doc_id bigint, text string",
     )
     # materialize tokens first (inlining caveat): two selects
-    toks = df.select("doc_id", tokens(F.col("text")).alias("t"))
-    g = toks.select("doc_id", word_ngrams_all(F.col("t"), 2).alias("g"))
+    toks = df.select("doc_id", F.expr(tokens("text")).alias("t"))
+    g = toks.select("doc_id", F.expr(word_ngrams_all("t", 2)).alias("g"))
     out = {
         r.doc_id: r
         for r in g.select(
             "doc_id",
-            duplicate_ngram_fraction(F.col("g")).alias("dup"),
-            top_ngram_fraction(F.col("g")).alias("top"),
+            F.expr(duplicate_ngram_fraction("g")).alias("dup"),
+            F.expr(top_ngram_fraction("g")).alias("top"),
         ).collect()
     }
     assert out[1].dup == pytest.approx(1 - 2 / 5)
@@ -104,12 +104,12 @@ def test_top_ngram_fraction_matches_exploded_definition(spark):
         word_ngrams_all,
     )
 
-    toks = df.select("doc_id", tokens(F.col("text")).alias("t"))
-    g = toks.select("doc_id", word_ngrams_all(F.col("t"), 2).alias("g"))
+    toks = df.select("doc_id", F.expr(tokens("text")).alias("t"))
+    g = toks.select("doc_id", F.expr(word_ngrams_all("t", 2)).alias("g"))
     fold = {
         r.doc_id: r.top
         for r in g.select(
-            "doc_id", top_ngram_fraction(F.col("g")).alias("top")
+            "doc_id", F.expr(top_ngram_fraction("g")).alias("top")
         ).collect()
     }
     exploded = (
@@ -201,7 +201,7 @@ def test_scrub_pii_and_normalize(spark):
     out = {
         r.id: r.clean
         for r in df.select(
-            "id", normalize_text(scrub_pii(F.col("text"))).alias("clean")
+            "id", F.expr(normalize_text(scrub_pii("text"))).alias("clean")
         ).collect()
     }
     assert out[1] == "contact me at <EMAIL> or <PHONE>"

@@ -13,13 +13,13 @@ def test_charclass_counts_exact(spark):
     from model_presto_spark.functions.text import charclass_counts
 
     df = spark.createDataFrame([("Ab1. x\ty\n",)], "text string")
-    cc = charclass_counts(F.col("text"))
-    row = df.select(
-        cc["n_chars"].alias("c"),
-        cc["n_upper"].alias("u"),
-        cc["n_digit"].alias("d"),
-        cc["n_punct"].alias("p"),
-        cc["n_space"].alias("s"),
+    cc = charclass_counts("text")
+    row = df.selectExpr(
+        f"{cc['n_chars']} AS c",
+        f"{cc['n_upper']} AS u",
+        f"{cc['n_digit']} AS d",
+        f"{cc['n_punct']} AS p",
+        f"{cc['n_space']} AS s",
     ).first()
     assert (row.c, row.u, row.d, row.p, row.s) == (9, 1, 1, 1, 3)
 
@@ -28,8 +28,8 @@ def test_charclass_empty_text_has_zero_ratios(spark):
     from model_presto_spark.functions.text import charclass_counts
 
     df = spark.createDataFrame([("",)], "text string")
-    cc = charclass_counts(F.col("text"))
-    row = df.select(cc["upper_ratio"].alias("r")).first()
+    cc = charclass_counts("text")
+    row = df.selectExpr(f"{cc['upper_ratio']} AS r").first()
     assert row.r == 0.0
 
 
@@ -39,12 +39,12 @@ def test_readability_counts(spark):
     # 4 words, 2 sentence runs ("." and "!?"), syllable groups:
     # "the"->e(1), "cat"->a(1), "ran"->a(1), "away"->a,ay(2) = 5
     df = spark.createDataFrame([("The cat ran. away!?",)], "text string")
-    rf = readability_features(F.col("text"))
-    row = df.select(
-        rf["n_words"].alias("w"),
-        rf["n_sentences"].alias("s"),
-        rf["n_syllables"].alias("y"),
-        rf["flesch"].alias("f"),
+    rf = readability_features("text")
+    row = df.selectExpr(
+        f"{rf['n_words']} AS w",
+        f"{rf['n_sentences']} AS s",
+        f"{rf['n_syllables']} AS y",
+        f"{rf['flesch']} AS f",
     ).first()
     assert (row.w, row.s, row.y) == (4, 2, 5)
     expected = 206.835 - 1.015 * (4 / 2) - 84.6 * (5 / 4)
@@ -55,8 +55,8 @@ def test_readability_min_one_sentence(spark):
     from model_presto_spark.functions.text import readability_features
 
     df = spark.createDataFrame([("no terminator here",)], "text string")
-    rf = readability_features(F.col("text"))
-    assert df.select(rf["n_sentences"].alias("s")).first().s == 1
+    rf = readability_features("text")
+    assert df.selectExpr(f"{rf['n_sentences']} AS s").first().s == 1
 
 
 def test_source_overlap_jaccard(spark):

@@ -76,7 +76,7 @@ def test_ensemble_screen_drops_background_candidates(spark):
     grams = docs.select(
         F.col("doc_id").alias("id"),
         F.array_distinct(
-            hash_array(word_ngrams(tokens(F.col("text")), 3), fast=True)
+            F.expr(hash_array(word_ngrams(tokens("text"), 3), fast=True))
         ).alias("grams"),
     )
     loose = _containment_ensemble_candidates(

@@ -84,7 +84,7 @@ def test_streaming_budget_equals_batch_analog(spark, tmp_path):
     from model_presto_spark.io import load_table
 
     docs = load_table(spark, sf, "documents").select(
-        "source", "doc_id", token_count(F.col("text")).alias("n_tokens")
+        "source", "doc_id", F.expr(token_count("text")).alias("n_tokens")
     )
     landing = str(tmp_path / "landing")
     docs.coalesce(1).write.parquet(landing)

@@ -68,7 +68,7 @@ def test_forward_matches_snyder(spark, grid):
     df = spark.createDataFrame(
         [(la, lon0 + off) for la, off in grid], "lat double, lon double"
     )
-    en = transverse_mercator(F.col("lat"), F.col("lon"), F.lit(lon0))
+    en = F.expr(transverse_mercator("lat", "lon", f"{lon0!r}D"))
     rows = df.select("lat", "lon", en.alias("en")).collect()
     for r in rows:
         x, y = snyder_tm(r.lat, r.lon, lon0)
@@ -85,7 +85,7 @@ def test_utm_forward_inverse_roundtrip(spark, grid):
     df = spark.createDataFrame(
         [(la, lon0 + off) for la, off in grid], "lat double, lon double"
     )
-    utm = utm_forward(F.col("lat"), F.col("lon"))
+    utm = F.expr(utm_forward("lat", "lon"))
     back = df.select("lat", "lon", utm.alias("u")).select(
         "lat",
         "lon",
@@ -108,7 +108,7 @@ def test_utm_zone_and_false_northing(spark):
     df = spark.createDataFrame(
         [(-33.9, 18.4), (40.7, -74.0), (35.7, 139.7)], "lat double, lon double"
     )
-    rows = df.select(utm_forward(F.col("lat"), F.col("lon")).alias("u")).collect()
+    rows = df.select(F.expr(utm_forward("lat", "lon")).alias("u")).collect()
     cape, nyc, tokyo = [r.u for r in rows]
     assert cape.zone == 34 and not cape.northern
     assert cape.northing > 6_000_000  # south: false northing applied
@@ -122,14 +122,14 @@ def test_known_coordinate_sanity(spark):
 
     df = spark.createDataFrame([(0.0, 9.0)], "lat double, lon double")
     en = df.select(
-        transverse_mercator(F.col("lat"), F.col("lon"), F.lit(9.0)).alias("en")
+        F.expr(transverse_mercator("lat", "lon", "9.0D")).alias("en")
     ).collect()[0].en
     assert en.easting == pytest.approx(500000.0, abs=1e-6)
     assert en.northing == pytest.approx(0.0, abs=1e-6)
     # one degree of longitude at the equator ~ 111.32 km * k0
     df2 = spark.createDataFrame([(0.0, 10.0)], "lat double, lon double")
     en2 = df2.select(
-        transverse_mercator(F.col("lat"), F.col("lon"), F.lit(9.0)).alias("en")
+        F.expr(transverse_mercator("lat", "lon", "9.0D")).alias("en")
     ).collect()[0].en
     assert en2.easting - 500000.0 == pytest.approx(111320.0 * K0, rel=2e-3)
 
@@ -187,24 +187,83 @@ def test_polygon_centroid_orientation_invariant(spark):
     assert got[1] == (pytest.approx(2.0), pytest.approx(1.0))
 
 
-def test_utm_forward_sql_bit_identical(spark):
-    """The SQL-string twin (one py4j round-trip per plan build) must
-    compute the EXACT same doubles as the Column-API utm_forward —
-    same ops, same operand order, D-suffixed literals."""
-    from model_presto_spark.functions.geo import utm_forward, utm_forward_sql
+def test_utm_forward_matches_duckdb(spark):
+    """The Spark SQL utm_forward against q56's DuckDB spelling of the
+    same Krüger series (sinh/cosh via exp, atanh via ln) on a global
+    grid plus the zone and hemisphere boundaries: zone and hemisphere
+    exactly, metres to a micrometre."""
+    import duckdb
+
+    from model_presto_spark.functions import geo as G
 
     pts = [
         (float(la), float(lo))
         for la in range(-80, 85, 7)
         for lo in range(-180, 180, 23)
     ]
-    df = spark.createDataFrame(pts, "lat double, lon double")
-    both = df.select(
-        utm_forward(F.col("lat"), F.col("lon")).alias("a"),
-        F.expr(utm_forward_sql("lat", "lon")).alias("b"),
-    ).collect()
-    for r in both:
-        assert r.a.zone == r.b.zone
-        assert r.a.northern == r.b.northern
-        assert r.a.easting == r.b.easting  # bit-exact, no tolerance
-        assert r.a.northing == r.b.northing
+    pts += [(0.0, 0.0), (0.0, -180.0), (-0.0, 6.0), (84.0, 179.999), (-80.0, 5.999)]
+    df = spark.createDataFrame(
+        [(i, la, lo) for i, (la, lo) in enumerate(pts)],
+        "id int, lat double, lon double",
+    )
+    got = {
+        r.id: tuple(r.u)
+        for r in df.select("id", F.expr(G.utm_forward("lat", "lon")).alias("u"))
+        .collect()
+    }
+    a1, a2, a3, a4 = (repr(a) for a in G._ALPHA)
+    e = repr(G._E)
+    ka = repr(G.UTM_K0 * G._A_BAR)
+    dd_utm = f"""
+    WITH zoned AS (
+      SELECT id, lat, lon,
+             CAST(FLOOR((lon + 180.0) / 6.0) % 60 + 1 AS INT) AS zone
+      FROM t
+    ), base AS (
+      SELECT *,
+             radians(lat) AS phi,
+             radians(lon - (zone * 6.0 - 183.0)) AS lam,
+             sin(radians(lat)) AS sphi
+      FROM zoned
+    ), conf AS (
+      SELECT *,
+             0.5*ln((1.0 + sphi)/(1.0 - sphi))
+               - {e} * (0.5*ln((1.0 + {e}*sphi)/(1.0 - {e}*sphi))) AS q
+      FROM base
+    ), tt AS (
+      SELECT *, (exp(q) - exp(-q))/2.0 AS t FROM conf
+    ), prim AS (
+      SELECT *,
+             atan2(t, cos(lam)) AS xi_p,
+             ln(sin(lam)/sqrt(t*t + cos(lam)*cos(lam))
+                + sqrt((sin(lam)/sqrt(t*t + cos(lam)*cos(lam)))
+                     * (sin(lam)/sqrt(t*t + cos(lam)*cos(lam))) + 1.0)) AS eta_p
+      FROM tt
+    ), series AS (
+      SELECT *,
+        xi_p + {a1}*sin(2.0*xi_p)*((exp(2.0*eta_p)+exp(-2.0*eta_p))/2.0)
+             + {a2}*sin(4.0*xi_p)*((exp(4.0*eta_p)+exp(-4.0*eta_p))/2.0)
+             + {a3}*sin(6.0*xi_p)*((exp(6.0*eta_p)+exp(-6.0*eta_p))/2.0)
+             + {a4}*sin(8.0*xi_p)*((exp(8.0*eta_p)+exp(-8.0*eta_p))/2.0) AS xi,
+        eta_p + {a1}*cos(2.0*xi_p)*((exp(2.0*eta_p)-exp(-2.0*eta_p))/2.0)
+              + {a2}*cos(4.0*xi_p)*((exp(4.0*eta_p)-exp(-4.0*eta_p))/2.0)
+              + {a3}*cos(6.0*xi_p)*((exp(6.0*eta_p)-exp(-6.0*eta_p))/2.0)
+              + {a4}*cos(8.0*xi_p)*((exp(8.0*eta_p)-exp(-8.0*eta_p))/2.0) AS eta
+      FROM prim
+    )
+    SELECT id, zone, lat >= 0 AS northern,
+           500000.0 + {ka} * eta AS easting,
+           CASE WHEN lat >= 0 THEN 0.0 ELSE 10000000.0 END + {ka} * xi
+             AS northing
+    FROM series
+    """
+    con = duckdb.connect()
+    con.register("t", df.toArrow())
+    want = {r[0]: r[1:] for r in con.execute(dd_utm).fetchall()}
+    assert got.keys() == want.keys()
+    for k, (zone, northern, easting, northing) in got.items():
+        assert (zone, northern) == want[k][:2]
+        # DuckDB's exp-based sinh/cosh differ from Java's in the last
+        # bits (~1e-9 m); q56 rounds to the millimetre
+        assert easting == pytest.approx(want[k][2], abs=1e-6)
+        assert northing == pytest.approx(want[k][3], abs=1e-6)
