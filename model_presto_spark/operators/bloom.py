@@ -119,7 +119,6 @@ def bloom_prefilter_join(
     how: str = "inner",
     num_bits: int = 1 << 20,
     num_hashes: int = 3,
-    broadcast_build: bool = False,
 ) -> DataFrame:
     """Equi-join with a Bloom pre-filter on the probe side.
 
@@ -135,5 +134,4 @@ def bloom_prefilter_join(
     filtered = probe.where(
         bloom_might_contain(F.col(on), words, num_hashes=num_hashes)
     )
-    right = F.broadcast(build) if broadcast_build else build
-    return filtered.join(right, on, how)
+    return filtered.join(build, on, how)

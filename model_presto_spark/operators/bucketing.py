@@ -23,7 +23,6 @@ def write_bucketed(
     table: str,
     bucket_key: str | list[str],
     num_buckets: int = 32,
-    sort: bool = True,
     path: str | None = None,
 ) -> None:
     """Persist as a bucketed (and bucket-sorted) catalog table.
@@ -33,9 +32,9 @@ def write_bucketed(
     config, so explicit paths are how callers control placement.
     """
     keys = [bucket_key] if isinstance(bucket_key, str) else list(bucket_key)
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, *keys)
-    if sort:
-        writer = writer.sortBy(*keys)
+    writer = (
+        df.write.mode("overwrite").bucketBy(num_buckets, *keys).sortBy(*keys)
+    )
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table)

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import logging
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -91,7 +92,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    reuse: bool = True,
     fast_hash: bool = False,
     max_bucket_size: int = 2000,
     signature_screen: float | None | str = "auto",
@@ -188,23 +188,19 @@ def minhash_lsh_pairs(
         f"{hash_array(char_shingles('lc', shingle_k), fast=fast_hash)}"
         f" AS hs",
     )
-    if reuse:
-        # The hash-set table feeds three DAG branches (signature +
-        # both sides of the verify join); Spark has no cross-branch
-        # CSE, so without a persist the shingle+md5 pass runs 3x.
-        # MEMORY_AND_DISK: ~8 bytes/shingle, spills cleanly at scale.
-        # Pass reuse=False to trade recompute for zero cache footprint.
-        from pyspark import StorageLevel
-
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    # The hash-set table feeds three DAG branches (signature + both
+    # sides of the verify join); Spark has no cross-branch CSE, so
+    # without a persist the shingle+md5 pass runs 3x.
+    # MEMORY_AND_DISK: ~8 bytes/shingle, spills cleanly at scale.
+    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     if signature_screen == "auto":
         # ``approx_docs`` (caller-supplied size hint, e.g. from a
         # pipeline that already counted) skips the probe job entirely.
         # Otherwise the probe counts the hash-set table just built: it
-        # has one row per doc, and with ``reuse`` the count is the job
-        # that fills the cache the signature and verify branches read
-        # anyway, so the upstream lineage runs once, not once for the
-        # probe and again for the hash sets.
+        # has one row per doc, and the count is the job that fills the
+        # cache the signature and verify branches read anyway, so the
+        # upstream lineage runs once, not once for the probe and again
+        # for the hash sets.
         n_docs = approx_docs if approx_docs is not None else sh.count()
         if n_docs >= auto_min_docs:
             signature_screen = max(0.0, threshold - 0.25)
@@ -379,7 +375,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.3,
     max_doc_freq: int = 1000,
-    reuse: bool = True,
     fast_hash: bool = False,
     candidates: str = "auto",
 ) -> DataFrame:
@@ -438,12 +433,9 @@ def ngram_jaccard_pairs(
         f"{hash_array(word_ngrams('toks', n), fast=fast_hash)})"
         f" AS grams",
     )
-    if reuse:
-        # Feeds the posting explode plus the size lookup; see the
-        # equivalent persist note in minhash_lsh_pairs.
-        from pyspark import StorageLevel
-
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
+    # Feeds the posting explode plus the size lookup; see the
+    # equivalent persist note in minhash_lsh_pairs.
+    grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
     sizes = grams.select("id", F.size("grams").alias("n_grams"))
     posting = grams.select("id", F.explode("grams").alias("gram"))
     if candidates == "bucket":
@@ -500,9 +492,8 @@ def ngram_jaccard_pairs(
             "n_grams",
         )
     )
-    if reuse:
-        # feeds prefix postings and both verify sides
-        edoc = edoc.localCheckpoint(eager=False)
+    # feeds prefix postings and both verify sides
+    edoc = edoc.localCheckpoint(eager=False)
     # required overlap w.r.t. this doc: smallest integer >= t*n —
     # floor(t*n - eps)+1, not ceil (same float-edge reasoning as
     # ngram_containment_pairs).
@@ -601,7 +592,6 @@ def embedding_dup_pairs(
     max_rows: int | None = 10_000,
     on_overflow: str = "error",
     planes: int = 12,
-    strategy: str = "blas",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs.
 
@@ -616,18 +606,13 @@ def embedding_dup_pairs(
     with recall < 1 by construction (near-identical vectors land in
     the same bucket with prob ~ (1 - theta/pi)^planes).
 
-    ``strategy='blas'`` (default) runs the exact path as a broadcast
-    block matmul: the bounded side is normalized once, broadcast as a
-    dense matrix, and every Arrow batch of the distributed side scores
-    against it with one numpy GEMM inside ``mapInPandas`` — the same
-    broadcast-probe distribution as the expression plan but with the
+    The exact path is a broadcast block matmul: the bounded side is
+    normalized once, broadcast as a dense matrix, and every Arrow
+    batch of the distributed side scores against it with one numpy
+    GEMM inside ``mapInPandas`` — the same broadcast-probe
+    distribution as a Catalyst cross-join plan but with the
     64x-per-pair inner loop in BLAS, ~10x faster wall-clock.
-    ``strategy='expr'`` keeps the pure-Catalyst HOF plan (sequential
-    fold order, bit-identical to the DuckDB oracle — useful when
-    last-ulp parity matters more than throughput).
     """
-    from model_presto_spark.functions.vectors import cosine_similarity
-
     if max_rows is not None:
         n = df.count()
         if n > max_rows:
@@ -640,24 +625,7 @@ def embedding_dup_pairs(
                 "deliberately bounded exact run, or use "
                 "operators.knn.ann_lsh_join / ivf_knn_join for top-k."
             )
-
-    if strategy == "blas":
-        return _blocked_exact_pairs(df, id_col, vec_col, threshold)
-
-    # spread the streamed side: the id_a < id_b condition makes this a
-    # broadcast nested-loop join, and the per-pair cosine work must
-    # not inherit a single-file scan's partitioning
-    a = spread(df).select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.expr(cosine_similarity("va", "vb")).alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-    )
+    return _blocked_exact_pairs(df, id_col, vec_col, threshold)
 
 
 def _blocked_exact_pairs(
@@ -669,11 +637,11 @@ def _blocked_exact_pairs(
     L2-normalized, and broadcast as a dense float64 matrix; the other
     side stays distributed and each Arrow batch computes a single
     ``batch @ B.T`` GEMM, emitting only (id_a < id_b, sim >= threshold)
-    survivors. Zero-norm vectors score NaN and never pass the
-    threshold — same outcome as the expression plan's 0/0. At corpus
-    scale (broadcast side too big) use ``on_overflow='lsh'`` or
-    operators.knn.ivf_knn_join instead; this is the exact-baseline
-    shape, like knn.cosine_topk's broadcast probe.
+    survivors. Zero-norm vectors score NaN (0/0) and never pass the
+    threshold. At corpus scale (broadcast side too big) use
+    ``on_overflow='lsh'`` or operators.knn.ivf_knn_join instead; this
+    is the exact-baseline shape, like knn.cosine_topk's broadcast
+    probe.
     """
     import numpy as np
     import pandas as pd
@@ -882,8 +850,6 @@ def span_dup_stats(
     )
     # pc feeds two branches (global totals + the join back); without a
     # persist the tokenize+hash pass over the corpus runs twice
-    from pyspark import StorageLevel
-
     pc = pc.persist(StorageLevel.MEMORY_AND_DISK)
     glob = pc.groupBy("whash").agg(F.sum("cnt").alias("total"))
     d = (
@@ -934,8 +900,6 @@ def remove_dup_spans(
         F.count("*").alias("cnt"), F.collect_list("i").alias("starts")
     )
     # two consumers (totals + dup-start extraction) — see span_dup_stats
-    from pyspark import StorageLevel
-
     pc = pc.persist(StorageLevel.MEMORY_AND_DISK)
     glob = pc.groupBy("whash").agg(F.sum("cnt").alias("total"))
     dup_starts = (
@@ -1082,7 +1046,6 @@ def ngram_containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_doc_freq: int = 1000,
-    reuse: bool = True,
     fast_hash: bool = False,
     candidates: str = "auto",
     num_hashes: int = 128,
@@ -1234,14 +1197,11 @@ def ngram_containment_pairs(
         f"{hash_array(word_ngrams('toks', n), fast=fast_hash)})"
         f" AS grams",
     )
-    if reuse:
-        # grams feeds posting + sizes (and the LSH signature in lsh
-        # mode) — Spark has no cross-branch CSE, so without a persist
-        # the tokenize+ngram+hash pass (the dominant linear cost)
-        # runs once per branch.
-        from pyspark import StorageLevel
-
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
+    # grams feeds posting + sizes (and the LSH signature in lsh mode)
+    # — Spark has no cross-branch CSE, so without a persist the
+    # tokenize+ngram+hash pass (the dominant linear cost) runs once
+    # per branch.
+    grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
     sizes = grams.select("id", F.size("grams").alias("n_grams"))
     posting = grams.select("id", F.explode("grams").alias("gram"))
     # document frequency via ONE shuffle on the gram hash; keep only
@@ -1269,9 +1229,8 @@ def ngram_containment_pairs(
             "n_grams",
         )
     )
-    if reuse:
-        # feeds prefix postings, full postings, and both verify sides
-        edoc = edoc.localCheckpoint(eager=False)
+    # feeds prefix postings, full postings, and both verify sides
+    edoc = edoc.localCheckpoint(eager=False)
     if candidates == "lsh":
         cand = _containment_lsh_candidates(
             grams, num_hashes, bands, max_bucket_size
@@ -1684,8 +1643,6 @@ def semantic_dedup(
 
     Output: (id, bucket, cos_centroid ROUNDED 6dp, is_semantic_dup).
     """
-    from pyspark import StorageLevel
-
     from model_presto_spark.functions.vectors import as_double
     from model_presto_spark.operators.knn import _hyperplane_bucket_sql
 
@@ -1814,8 +1771,6 @@ def winnow_shared_stats(
     Output: (id, n_fp, shared_fp, shared_fraction) for every doc.
     """
     fp = winnow_fingerprints(docs, k, w, text_col, id_col, fast_hash)
-    from pyspark import StorageLevel
-
     per_doc = fp.groupBy(id_col, "whash").agg(
         F.count(F.lit(1)).alias("cnt")
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1917,7 +1872,6 @@ def ppjoin_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    reuse: bool = True,
     fast_hash: bool = False,
 ) -> DataFrame:
     """Prefix-filtered exact n-gram Jaccard self-join (the PPJoin
@@ -1950,7 +1904,6 @@ def ppjoin_pairs(
         n=n,
         threshold=threshold,
         max_doc_freq=1 << 62,
-        reuse=reuse,
         fast_hash=fast_hash,
         candidates="prefix",
     )

@@ -25,8 +25,8 @@ and the seed probe adds two more, which on a corpus-dedup edge list of
 a few hundred pairs is most of the operator's time even when the first
 labels are already the fixpoint. So when the checkpointed edge list
 holds at most ``CAP`` edges, it is collected (one job over the cached
-blocks) and finished by union-find on the driver; ``max_iter`` and
-``jump_squarings`` only apply above ``CAP``.
+blocks) and finished by union-find on the driver; ``max_iter`` only
+applies above ``CAP``.
 """
 
 from __future__ import annotations
@@ -77,24 +77,22 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 20,
-    jump_squarings: int = 2,
 ) -> DataFrame:
     """(src, dst) edge list -> (id, component) with component = min
     node id reachable. Nodes appearing only as isolated edges map to
     their own pair-minimum; nodes absent from ``pairs`` are absent
     from the output (callers left-join and coalesce to self).
 
-    ``jump_squarings`` controls how many times the label pointer is
-    squared *within one round's plan* (each squaring is one more
-    self-join of the materialized label table, and at least quarters
-    the remaining chain depth when >= 2). Higher values trade shuffle
-    volume per round for fewer rounds; 2 is the sweet spot when round
-    scheduling overhead dominates (small/medium graphs), 1 recovers
-    the classic one-jump iteration for very large label tables.
+    Each round squares the label pointer twice *within its plan*
+    (each squaring is one more self-join of the materialized label
+    table; two at least quarter the remaining chain depth), which
+    trades shuffle volume per round for fewer rounds where round
+    scheduling overhead dominates.
 
     Edge lists of at most ``CAP`` edges (integer or string ids) are
     finished on the driver by union-find instead, with the same
-    result; ``max_iter`` and ``jump_squarings`` only apply above it.
+    result; ``max_iter`` only applies above it. Above it the result is
+    the last round's checkpointed, cached label table.
     """
     # Materialize the directed edge list BEFORE symmetrizing: the
     # union below references ``edges`` twice, and Spark has no
@@ -189,7 +187,6 @@ def connected_components(
             new.alias("n")
             .join(old.alias("o"), "id")
             .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
             .count()
             > 0
         )
@@ -217,14 +214,14 @@ def connected_components(
             .agg(F.min("cu").alias("comp"))
         )
         # pointer jump with in-plan path doubling: comp <- comp(comp),
-        # squared ``jump_squarings`` times in ONE plan. Labels always
-        # point at a node present in ``labels`` (min-so-far node ids),
-        # so every inner join is total. Each squaring self-joins the
-        # previous jump plan, so one round follows 2^k pointer hops —
-        # the label table is localCheckpoint-materialized, so the
-        # 2^k-way join re-reads cached rows, not lineage.
+        # squared twice in ONE plan. Labels always point at a node
+        # present in ``labels`` (min-so-far node ids), so every inner
+        # join is total. Each squaring self-joins the previous jump
+        # plan, so one round follows 4 pointer hops — the label table
+        # is localCheckpoint-materialized, so the 4-way join re-reads
+        # cached rows, not lineage.
         jump = labels
-        for _ in range(max(1, jump_squarings)):
+        for _ in range(2):
             jump = jump.join(
                 jump.select(
                     F.col("id").alias("comp"), F.col("comp").alias("comp2")
@@ -236,24 +233,32 @@ def connected_components(
         # probe was two), which AQE still runs as 11-12 jobs. The probe
         # reads the checkpointed partitions, so the next round's joins
         # re-read cached rows, not lineage.
+        # The cache on top cuts the size estimate carried across
+        # rounds: a checkpoint keeps its plan's estimate, and this
+        # plan's joins multiply their children's (the two squarings
+        # raise the label table's to the 4th power), so the estimate's
+        # digits grew 4x per round and Catalyst spent seconds on the
+        # BigInt alone by round 10. A filled cache reports its measured
+        # size instead, so every round plans from real sizes. Both
+        # probes read every row, which fills it.
         new_labels = (
             labels.unionByName(prop)
             .unionByName(jump)
             .groupBy("id")
             .agg(F.min("comp").alias("comp"))
             .localCheckpoint(eager=False)  # truncate iterative lineage
+            .persist()
         )
         if numeric_ids:
-            labels = new_labels
-            cur_sum = _comp_sum(labels)
-            if cur_sum == prev_sum:
-                break
+            cur_sum = _comp_sum(new_labels)
+            done = cur_sum == prev_sum
             prev_sum = cur_sum
         else:
             done = not _changed(new_labels, labels)
-            labels = new_labels
-            if done:
-                break
+        labels.unpersist()
+        labels = new_labels
+        if done:
+            break
     return labels
 
 

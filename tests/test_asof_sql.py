@@ -1,70 +1,102 @@
-"""Pin the SQL-string-built asof_join to a Column-built reference.
+"""Pin the SQL-string-built asof_join to DuckDB's ASOF JOIN.
 
-Round-9 rewrote asof_join's condition / distance / dedup-window
-expressions as SQL strings parsed JVM-side (guide §7.3: the Column API
-cost ~595 py4j round-trips per q13 build). The physical plans are
-byte-identical (plans/r09/q13*,q49*), but a plan capture covers only
-the two bench queries' shapes; this test pins BIT-equality of the
-results against the former Column-by-Column construction across every
-direction × tolerance × left_key combination, on data with ties,
-out-of-tolerance rows, and unmatched left rows.
+asof_join builds its condition / distance / dedup-window expressions
+as SQL strings parsed JVM-side (guide §7.3: the Column API cost ~595
+py4j round-trips per q13 build). The reference is an independent
+DuckDB spelling over the same frames handed over as Arrow: one
+``ASOF LEFT JOIN`` per side of the direction (``nearest`` takes the
+closer of the backward and forward matches), the tolerance applied to
+the matched distance, and the engine's documented tie-break at equal
+distance (the lexicographically-largest right payload row). Every
+direction × tolerance × left_key combination runs on data with ties,
+out-of-tolerance rows, and unmatched left rows. The test names predate
+the DuckDB reference and are kept so the test ids stay stable.
 """
 
 from __future__ import annotations
 
 import datetime
 
+import duckdb
+import pyarrow as pa
 import pytest
-from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
 from model_presto_spark.operators.asof import asof_join
+from model_presto_spark.testing import rows_to_multiset
 
 
-def _reference_asof(
-    left, right, on, left_ts, right_ts,
-    tolerance=None, direction="backward", suffix="_right", left_key=None,
-):
-    """The pre-round-9 Column-built implementation, verbatim."""
-    keys = [on] if isinstance(on, str) else list(on)
-    if isinstance(left_key, str):
-        left_key = [left_key]
-    l_cols = set(left.columns)
-    renames = {c: (c + suffix if c in l_cols else c) for c in right.columns}
-    r = right.select([F.col(c).alias(renames[c]) for c in right.columns])
-    r_ts = renames[right_ts]
-    r_payload = [renames[c] for c in right.columns if c not in keys]
-    lt, rt = F.col(left_ts), F.col(r_ts)
-    if direction == "backward":
-        cond: Column = rt <= lt
-        if tolerance is not None:
-            cond = cond & (rt >= lt - F.expr(f"INTERVAL {tolerance}"))
-        dist = lt - rt
-    elif direction == "forward":
-        cond = rt >= lt
-        if tolerance is not None:
-            cond = cond & (rt <= lt + F.expr(f"INTERVAL {tolerance}"))
-        dist = rt - lt
-    elif direction == "nearest":
-        cond = F.lit(True)
-        if tolerance is not None:
-            cond = (rt >= lt - F.expr(f"INTERVAL {tolerance}")) & (
-                rt <= lt + F.expr(f"INTERVAL {tolerance}")
-            )
-        dist = F.abs(lt - rt)
-    else:
-        raise ValueError(direction)
-    for k in keys:
-        cond = (left[k] == r[renames[k]]) & cond
-    joined = left.join(r, cond, "left").drop(*[renames[k] for k in keys])
-    part_cols = left_key if left_key else left.columns
-    w = Window.partitionBy(*[left[c] for c in part_cols]).orderBy(
-        dist.asc_nulls_last(), *[F.col(c).desc() for c in r_payload]
+def _naive(tbl: pa.Table) -> pa.Table:
+    """Timestamps as naive UTC wall time, so both engines hand back
+    the same Python values whatever the local time zone."""
+    return tbl.cast(
+        pa.schema(
+            [
+                pa.field(f.name, pa.timestamp("us"))
+                if pa.types.is_timestamp(f.type)
+                else f
+                for f in tbl.schema
+            ]
+        )
     )
-    return (
-        joined.withColumn("__asof_rn", F.row_number().over(w))
-        .filter(F.col("__asof_rn") == 1)
-        .drop("__asof_rn")
+
+
+def _duckdb_asof(left, right, on, left_ts, right_ts, tolerance=None,
+                 direction="backward", suffix="_right", left_key=None):
+    """DuckDB ASOF JOIN reference. Left rows are told apart by
+    ``probe_id`` (unique in these fixtures), whatever ``left_key``
+    the engine call declares."""
+    keys = [on] if isinstance(on, str) else list(on)
+    payload = [c for c in right.columns if c not in keys]
+    out = {c: (c + suffix if c in left.columns else c) for c in payload}
+    eq = " AND ".join(f"l.{k} = r.{k}" for k in keys)
+    sides = {"backward": [">="], "forward": ["<="], "nearest": [">=", "<="]}
+    cands = " UNION ALL ".join(
+        f"SELECT l.probe_id, "
+        + ", ".join(f"r.{c} AS {out[c]}" for c in payload)
+        + f" FROM l ASOF LEFT JOIN r ON {eq} AND l.{left_ts} {op} r.{right_ts}"
+        for op in sides[direction]
+    )
+    r_ts = f"c.{out[right_ts]}"
+    dist = f"abs(epoch_us({r_ts}) - epoch_us(l.{left_ts}))"
+    within = (
+        "TRUE" if tolerance is None
+        else f"{r_ts} BETWEEN l.{left_ts} - INTERVAL '{tolerance}'"
+        f" AND l.{left_ts} + INTERVAL '{tolerance}'"
+    )
+    ties = ", ".join(f"c.{out[c]} DESC" for c in payload)
+    # One DuckDB thread: the query runs on the calling thread. With
+    # worker threads this ASOF query over registered Arrow tables hung
+    # once inside the full test run (main thread in execute, a worker
+    # thread outside Python); the frames are a dozen rows.
+    con = duckdb.connect(config={"threads": 1})
+    con.register("l", _naive(left.toArrow()))
+    con.register("r", _naive(right.toArrow()))
+    res = con.execute(
+        f"""
+        WITH c AS ({cands}),
+        pick AS (
+            SELECT c.*, row_number() OVER (
+                PARTITION BY c.probe_id ORDER BY {dist}, {ties}) AS rn
+            FROM c JOIN l USING (probe_id)
+            WHERE {r_ts} IS NOT NULL AND {within}
+        )
+        SELECT l.*, {", ".join(f"pick.{out[c]}" for c in payload)}
+        FROM l LEFT JOIN pick ON pick.probe_id = l.probe_id AND pick.rn = 1
+        """
+    )
+    cols = [d[0] for d in res.description]
+    rows = res.fetchall()
+    con.close()
+    return cols, rows
+
+
+def _assert_matches_duckdb(got, left, right, **kwargs):
+    want_cols, want_rows = _duckdb_asof(left, right, **kwargs)
+    assert got.columns == want_cols
+    got_rows = [tuple(r.values()) for r in _naive(got.toArrow()).to_pylist()]
+    assert rows_to_multiset(got.columns, got_rows) == rows_to_multiset(
+        want_cols, want_rows
     )
 
 
@@ -116,11 +148,7 @@ def test_asof_sql_matches_column_reference(
         on="user_id", left_ts="ts", right_ts="ts",
         tolerance=tolerance, direction=direction, left_key=left_key,
     )
-    got = asof_join(left, right, **kwargs)
-    want = _reference_asof(left, right, **kwargs)
-    assert got.columns == want.columns
-    key = lambda r: tuple(str(v) for v in r)  # noqa: E731
-    assert sorted(map(key, got.collect())) == sorted(map(key, want.collect()))
+    _assert_matches_duckdb(asof_join(left, right, **kwargs), left, right, **kwargs)
 
 
 def test_asof_multi_key_and_unmatched(frames, spark):
@@ -133,8 +161,6 @@ def test_asof_multi_key_and_unmatched(frames, spark):
         tolerance="1 DAY", direction="backward", left_key="probe_id",
     )
     got = asof_join(l2, r2, **kwargs)
-    want = _reference_asof(l2, r2, **kwargs)
-    key = lambda r: tuple(str(v) for v in r)  # noqa: E731
-    assert sorted(map(key, got.collect())) == sorted(map(key, want.collect()))
+    _assert_matches_duckdb(got, l2, r2, **kwargs)
     # every left row survives (left-outer)
     assert got.count() == l2.count()

@@ -1,35 +1,43 @@
-"""At-scale A/B evidence for the spread() family (round-9 deliverable).
+"""At-scale A/B evidence for spread()'s repartition decision.
 
-Round 7/8 added ``spread()`` (round-robin repartition to cluster
-parallelism, io.py) in front of the CPU folds of knn_join,
-ann_lsh_join and the dedup/tokenize passes, with the reasoning: a
-few-file scan serializes per-row HOF work onto a few cores, and one
-skinny shuffle buys full-width parallelism. The knob
-``spark.model_presto.spread.mode=never`` no-ops it for deployments
-whose scans are already wide. This tool produces the measured
-evidence for both halves of that claim:
+``io.spread()`` puts a round-robin repartition to cluster parallelism
+in front of the CPU folds of knn_join, ann_lsh_join and the
+dedup/tokenize passes, unless the analyzed plan shows a
+select/filter chain over an unpartitioned scan that already lists at
+least ``defaultParallelism`` files. This tool checks that decision
+against both forced alternatives on two layouts of the same
+embeddings:
 
-- NARROW layout (1 parquet file — this repo's testdata shape, and the
-  shape of any small-dimension scan at cluster scale): spread=always
-  vs never on knn_join (64-d sqeuclidean + cosine, q45/q35-style),
-  knn_join 2-d (q23-style, the known local pessimization), and
-  ann_lsh_join (8x64 hyperplane fold, q40-style).
-- WIDE layout (32 parquet files — a stand-in for the tens of
-  thousands of splits a 100 TB table scan has): same A/B; spread is
-  expected neutral-to-negative, which is why the knob exists.
+- NARROW (1 parquet file — this repo's testdata shape, and the shape
+  of any small-dimension scan at cluster scale): the engine should
+  repartition, so it should time like ``always``.
+- WIDE (32 parquet files — a stand-in for the tens of thousands of
+  splits a 100 TB table scan has): the engine should leave the scan
+  alone, so it should time like ``never``.
 
-Candidate-set sizes scale the fold work (n_cand x n_probe x dim
-mults) past the shuffle cost so the sf0.1 "too small to amortize"
-objection is answered at the top size.
+Ops: knn_join (64-d sqeuclidean + cosine, q45/q35-style), knn_join
+2-d (q23-style) and ann_lsh_join (8x64 hyperplane fold, q40-style).
+The forced variants substitute ``spread`` in this process only, at
+every loaded engine module that binds it; the engine itself has no
+setting for it. Variants are interleaved per repetition, each
+repetition starting from the next variant, and the best of ``RUNS``
+is kept, so host drift and run order hit all three alike. Each cell
+also records which forced variant's optimized plan the engine's plan
+equals (expression ids aside): the timing gap to that variant is then
+measurement noise plus the decision's probe.
 
-Usage: python tools/spread_stress.py [out_json]
+Usage: python tools/spread_stress.py [out_json] [data_dir]
+
+The generated layouts are kept in ``data_dir`` (default
+/tmp/spread_stress) and reused by later runs.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
-import shutil
+import re
 import sys
 import time
 
@@ -37,10 +45,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
 
-SCRATCH = "/tmp/spread_stress_r9"
 DIM = 64
 SIZES = {"s20k": 20_000, "s100k": 100_000}
 N_PROBES = 20
+RUNS = 3
+VARIANTS = ("engine", "always", "never")
 
 
 def gen_embeddings(spark, n: int, path_narrow: str, path_wide: str) -> None:
@@ -56,18 +65,39 @@ def gen_embeddings(spark, n: int, path_narrow: str, path_wide: str) -> None:
     df.repartition(32).write.mode("overwrite").parquet(path_wide)
 
 
-def timed(fn, runs: int = 2) -> float:
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
+@contextlib.contextmanager
+def forced_spread(variant: str):
+    """Substitute ``spread`` with a forced repartition (``always``) or
+    a no-op (``never``) at every loaded module that binds it."""
+    import model_presto_spark.io as io
+
+    engine = io.spread
+    if variant == "engine":
+        yield
+        return
+    if variant == "always":
+        def forced(df):
+            return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    else:
+        def forced(df):
+            return df
+    bound = [
+        m for name, m in list(sys.modules.items())
+        if name.startswith("model_presto_spark")
+        and getattr(m, "spread", None) is engine
+    ]
+    for m in bound:
+        m.spread = forced
+    try:
+        yield
+    finally:
+        for m in bound:
+            m.spread = engine
 
 
 def main() -> None:
-    out_json = sys.argv[1] if len(sys.argv) > 1 else "STRESS_r15.json"
-    from pyspark.sql import functions as F
+    out_json = sys.argv[1] if len(sys.argv) > 1 else "STRESS_r16.json"
+    data_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/spread_stress"
 
     from model_presto_spark.operators.knn import ann_lsh_join, knn_join
     from model_presto_spark.session import get_spark
@@ -77,13 +107,13 @@ def main() -> None:
 
     layouts: dict[str, dict[str, str]] = {}
     for tag, n in SIZES.items():
-        narrow = f"{SCRATCH}/{tag}/narrow"
-        wide = f"{SCRATCH}/{tag}/wide"
+        narrow = f"{data_dir}/{tag}/narrow"
+        wide = f"{data_dir}/{tag}/wide"
         if not (os.path.exists(narrow) and os.path.exists(wide)):
             gen_embeddings(spark, n, narrow, wide)
         layouts[tag] = {"narrow": narrow, "wide": wide}
 
-    def run_op(op: str, path: str) -> None:
+    def build_op(op: str, path: str):
         emb = spark.read.parquet(path)
         probes = emb.where(f"vec_id < {N_PROBES}").toDF("probe_id", "vec")
         cands = emb.toDF("cid", "vec")
@@ -104,31 +134,58 @@ def main() -> None:
                                k=5, dim=DIM, planes=8)
         else:
             raise ValueError(op)
-        out.write.format("noop").mode("overwrite").save()
+        return out
+
+    def plan(op: str, path: str) -> str:
+        text = build_op(op, path)._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?", "#", text)
 
     ops = ["knn64_sqeuclidean", "knn64_cosine", "knn2", "ann_lsh"]
-    results: dict = {"sizes": SIZES, "dim": DIM, "n_probes": N_PROBES,
-                     "timings": {}}
+    t: dict[str, float] = {}
+    same_plan: dict[str, list[str]] = {}
     for tag in SIZES:
         for layout, path in layouts[tag].items():
-            for mode in ("always", "never"):
-                spark.conf.set("spark.model_presto.spread.mode", mode)
-                for op in ops:
-                    # ann over 100k x 100k same-bucket pairs is a
-                    # genuine O(n^2/2^planes) rerank — cap ann at 20k
-                    if op == "ann_lsh" and tag != "s20k":
-                        continue
-                    key = f"{tag}.{layout}.{op}.{mode}"
-                    spark.sparkContext.setJobDescription(key)
-                    results["timings"][key] = timed(lambda: run_op(op, path))
-                    print(key, results["timings"][key], flush=True)
-    spark.conf.set("spark.model_presto.spread.mode", "always")
+            for op in ops:
+                # ann over 100k x 100k same-bucket pairs is a
+                # genuine O(n^2/2^planes) rerank — cap ann at 20k
+                if op == "ann_lsh" and tag != "s20k":
+                    continue
+                plans = {}
+                for variant in VARIANTS:
+                    with forced_spread(variant):
+                        plans[variant] = plan(op, path)
+                same_plan[f"{tag}.{layout}.{op}"] = [
+                    v for v in VARIANTS[1:] if plans[v] == plans["engine"]
+                ]
+                for r in range(RUNS):
+                    k = r % len(VARIANTS)
+                    for variant in VARIANTS[k:] + VARIANTS[:k]:
+                        key = f"{tag}.{layout}.{op}.{variant}"
+                        spark.sparkContext.setJobDescription(key)
+                        with forced_spread(variant):
+                            t0 = time.perf_counter()
+                            out = build_op(op, path)
+                            out.write.format("noop").mode("overwrite").save()
+                            dt = time.perf_counter() - t0
+                        t[key] = round(min(t.get(key, dt), dt), 3)
+                        print(key, round(dt, 3), flush=True)
 
-    t = results["timings"]
-    results["ratios_always_over_never"] = {
-        k[: -len(".always")]: round(t[k] / t[k[: -len(".always")] + ".never"], 3)
-        for k in t
-        if k.endswith(".always")
+    cells = sorted({k.rsplit(".", 1)[0] for k in t})
+    ratio = {
+        c: round(t[c + ".engine"] / min(t[c + ".always"], t[c + ".never"]), 3)
+        for c in cells
+    }
+    results = {
+        "sizes": SIZES,
+        "dim": DIM,
+        "n_probes": N_PROBES,
+        "runs": RUNS,
+        "cores": spark.sparkContext.defaultParallelism,
+        "timings_best_of_runs": t,
+        "ratio_engine_over_faster_forced": ratio,
+        "engine_plan_equals": same_plan,
+        "cells_within_10pct": sum(r <= 1.10 for r in ratio.values()),
+        "cells": len(ratio),
     }
     with open(out_json, "w") as f:
         json.dump(results, f, indent=1)
