@@ -111,28 +111,8 @@ def write_orc(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").orc(path)
 
 
-def _scan_file_count(df: DataFrame) -> int:
-    """Files listed by the one unpartitioned file relation under a
-    Project/Filter/SubqueryAlias chain of ``df``'s analyzed plan, else
-    0. Walks the plan over py4j (10 round-trips for a bare scan, 2
-    more per chain node); never optimizes or plans the query."""
-    plan = df._jdf.queryExecution().analyzed()
-    while (name := plan.nodeName()) in ("Project", "Filter", "SubqueryAlias"):
-        plan = plan.child()
-    if name != "LogicalRelation":
-        return 0
-    rel = plan.relation()
-    if (
-        rel.getClass().getSimpleName() != "HadoopFsRelation"
-        or not rel.partitionSchema().isEmpty()
-    ):
-        return 0
-    return len(rel.inputFiles())
-
-
 def spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to cluster parallelism, unless the scan
-    already provides it.
+    """Round-robin repartition to cluster parallelism.
 
     CPU-bound operators (shingling, per-element hashing, vector math)
     must not inherit the scan's partitioning: a small file count — or
@@ -140,24 +120,13 @@ def spread(df: DataFrame) -> DataFrame:
     few cores. One cheap shuffle of the raw rows buys full-cluster
     parallelism for everything downstream.
 
-    Decision rule: a Project/Filter/SubqueryAlias chain over one
-    unpartitioned file relation that lists at least
-    ``defaultParallelism`` files is returned unchanged; its scan
-    already fills every core, and re-shuffling raw rows there is pure
-    cost (STRESS_r15: 1.12-1.44x on a 32-file layout). Everything else
-    is repartitioned: few-file scans (6-15x faster than leaving them),
-    and joins, aggregates, unions, in-memory or RDD sources,
-    hive-partitioned relations and streams, whose plans do not state
-    a file count. The probe walks the already-analyzed plan: a median
-    2-2.5 ms per warm call and ~43 ms on a session's first (4-core
-    host, sf0.1 ``documents``), against a median 63 ms for
-    ``df.inputFiles()`` (optimizes the query) and 141 ms for
-    ``df.rdd.getNumPartitions()`` (plans it) on a new frame.
+    Always repartitions; there is no setting. On one-file scans that
+    is 6-15x faster than leaving the scan as it is (STRESS_r15). On a
+    scan that already lists a file per core the extra shuffle measured
+    0.85-1.09x of leaving it alone (STRESS_r16, 4-core host, 20k-100k
+    64-d embeddings), too close to pay for a per-call plan probe.
     """
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if _scan_file_count(df) >= n:
-        return df
-    return df.repartition(n)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

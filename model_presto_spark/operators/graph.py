@@ -92,7 +92,7 @@ def connected_components(
     Edge lists of at most ``CAP`` edges (integer or string ids) are
     finished on the driver by union-find instead, with the same
     result; ``max_iter`` only applies above it. Above it the result is
-    the last round's checkpointed, cached label table.
+    a checkpoint of the last round's labels, and nothing stays cached.
     """
     # Materialize the directed edge list BEFORE symmetrizing: the
     # union below references ``edges`` twice, and Spark has no
@@ -259,7 +259,12 @@ def connected_components(
         labels = new_labels
         if done:
             break
-    return labels
+    # hand back a checkpoint of the filled cache, not the cache: it
+    # keeps the measured size estimate, and callers that only use the
+    # result inside their own lineage would never unpersist it
+    out = labels.localCheckpoint(eager=True)
+    labels.unpersist()
+    return out
 
 
 def dedup_clusters(

@@ -98,8 +98,7 @@ def knn_join(
     # the candidate scan's stage (the probe side is broadcast), and a
     # single-file scan would serialize all O(n_cand * n_probe * dim)
     # fold work onto one core (io.spread docstring; same class as the
-    # dedup hashing passes). A scan already as wide as the cluster is
-    # left as it is.
+    # dedup hashing passes).
     c = spread(
         candidates.selectExpr(
             f"{_qt(cand_id)} AS __cid", f"{_qt(cand_vec)} AS __cvec"

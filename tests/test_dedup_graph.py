@@ -161,11 +161,42 @@ def test_connected_components_many_rounds_flat_size_estimate(
         sizes[max_iter] = int(
             comp._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-    # edges, sym and the initial labels, then one checkpoint per round
-    assert len(checkpoints) - 3 >= 11
+    # edges, sym and the initial labels, one checkpoint per round, and
+    # the returned one
+    assert len(checkpoints) - 4 >= 11
     assert dict(comp.collect()) == want
     assert sizes[20] < 2**63
     assert sizes[20] <= 2 * sizes[1], sizes
+
+
+def test_connected_components_distributed_frees_its_cache(spark, monkeypatch):
+    """The distributed rounds leave nothing in the session's cache: every
+    frame they persist is unpersisted by the time the result comes
+    back, for both convergence probes, so callers holding only the
+    result have nothing to free."""
+    from pyspark.storagelevel import StorageLevel
+
+    from model_presto_spark.operators import graph
+
+    monkeypatch.setattr(graph, "CAP", 0)
+    persisted = []
+    persist = type(spark.range(1)).persist
+
+    def recorded(df, *a, **kw):
+        persisted.append(df)
+        return persist(df, *a, **kw)
+
+    monkeypatch.setattr(type(spark.range(1)), "persist", recorded)
+    for schema, edges in (
+        ("id_a long, id_b long", [(1, 2), (2, 3), (7, 8)]),
+        ("id_a string, id_b string", [("a", "b"), ("b", "c"), ("x", "y")]),
+    ):
+        persisted.clear()
+        comp = graph.connected_components(spark.createDataFrame(edges, schema))
+        assert persisted
+        assert comp.storageLevel == StorageLevel.NONE
+        assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+        assert len({c for _, c in comp.collect()}) == 2
 
 
 def test_corpus_dedup_pipeline_job_budget(spark, tmp_path):

@@ -204,112 +204,14 @@ def test_patch_pool(spark):
     assert out[(1, 0)] == 10.0
 
 
-# --- io.spread: the engine's repartition decision ---------------------------
-
-
-@pytest.fixture(scope="module")
-def scan_layouts(spark, sf_dir, tmp_path_factory):
-    """One-file catalog tables and wide copies written with exactly
-    ``defaultParallelism`` files, plus a hive-partitioned copy of the
-    documents."""
-    import glob
-
-    from model_presto_spark.io import load_table
+def test_spread_always_repartitions(spark, sf_dir):
+    """spread() takes no setting: every input, a one-file scan or an
+    in-memory frame, comes back at cluster parallelism."""
+    from model_presto_spark.io import load_table, spread
 
     n = spark.sparkContext.defaultParallelism
-    d = tmp_path_factory.mktemp("spread")
-    out = {"n": n, "dir": d}
-    for name in ("documents", "embeddings"):
-        narrow = load_table(spark, sf_dir, name)
-        narrow.repartition(n).write.parquet(str(d / name))
-        assert len(glob.glob(str(d / name / "part-*.parquet"))) == n
-        out[name] = (narrow, spark.read.parquet(str(d / name)))
-    load_table(spark, sf_dir, "documents").write.partitionBy("lang").parquet(
-        str(d / "hive")
-    )
-    out["hive"] = spark.read.parquet(str(d / "hive"))
-    return out
-
-
-def test_spread_decides_from_the_plan(spark, scan_layouts):
-    from model_presto_spark.io import spread
-
-    n = scan_layouts["n"]
-    narrow, wide = scan_layouts["documents"]
-    # a one-file scan is repartitioned to cluster parallelism
-    assert spread(narrow).rdd.getNumPartitions() == n
-    # a select/filter chain over a scan of >= n files is left alone
-    chain = wide.select("doc_id", "text").filter("doc_id % 2 = 0").alias("w")
-    assert spread(wide) is wide
-    assert spread(chain) is chain
-    # the same files behind an aggregate, a hive-partitioned directory,
-    # an RDD-backed frame and a stream are repartitioned
-    others = [
-        wide.groupBy("lang").count(),
-        scan_layouts["hive"],
+    for df in (
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         spark.createDataFrame([(1, "a")], "id long, t string"),
-    ]
-    for df in others:
-        out = spread(df)
-        assert out is not df
-        assert out.rdd.getNumPartitions() == n
-    stream = spark.readStream.schema(wide.schema).parquet(
-        str(scan_layouts["dir"] / "documents")
-    )
-    assert spread(stream) is not stream
-
-
-def test_spread_probe_round_trips(scan_layouts, monkeypatch):
-    """The plan probe costs at most 15 py4j round-trips, counted at the
-    connection layer as tools/py4j_count.py counts them."""
-    import py4j.clientserver as cs
-    import py4j.java_gateway as jg
-
-    from model_presto_spark.io import _scan_file_count
-
-    calls = []
-    for cls in (cs.ClientServerConnection, jg.GatewayConnection):
-        orig = cls.send_command
-
-        def send_command(self, command, *a, _orig=orig, **kw):
-            calls.append(command)
-            return _orig(self, command, *a, **kw)
-
-        monkeypatch.setattr(cls, "send_command", send_command)
-    narrow, wide = scan_layouts["documents"]
-    for df, files in (
-        (narrow, 1),
-        (wide.select("doc_id", "text").filter("doc_id > 3"), scan_layouts["n"]),
-        (wide.groupBy("lang").count(), 0),
     ):
-        calls.clear()
-        assert _scan_file_count(df) == files
-        assert len(calls) <= 15, len(calls)
-
-
-def test_spread_decision_keeps_results(scan_layouts):
-    """knn_join and minhash_lsh_pairs return the same rows on the
-    one-file table (repartitioned) and on its wide copy (left as is)."""
-    from model_presto_spark.operators.dedup import minhash_lsh_pairs
-    from model_presto_spark.operators.knn import knn_join
-
-    def knn(emb):
-        probes = emb.where("vec_id < 20").withColumnRenamed("vec_id", "pid")
-        return knn_join(
-            probes, emb, "pid", "vec_id", "embedding", "embedding",
-            k=5, metric="cosine", exclude_self=True,
-        )
-
-    rows = [
-        sorted(map(tuple, op(df).collect()))
-        for op, (narrow, wide) in (
-            (knn, scan_layouts["embeddings"]),
-            (
-                lambda d: minhash_lsh_pairs(d, "doc_id", "text", threshold=0.5),
-                scan_layouts["documents"],
-            ),
-        )
-        for df in (narrow, wide)
-    ]
-    assert rows[0] == rows[1] and rows[0]
-    assert rows[2] == rows[3] and rows[2]
+        assert spread(df).rdd.getNumPartitions() == n

@@ -1,30 +1,25 @@
-"""At-scale A/B evidence for spread()'s repartition decision.
+"""At-scale A/B evidence for spread()'s repartition.
 
 ``io.spread()`` puts a round-robin repartition to cluster parallelism
 in front of the CPU folds of knn_join, ann_lsh_join and the
-dedup/tokenize passes, unless the analyzed plan shows a
-select/filter chain over an unpartitioned scan that already lists at
-least ``defaultParallelism`` files. This tool checks that decision
-against both forced alternatives on two layouts of the same
-embeddings:
+dedup/tokenize passes, on every input. This tool times that
+(``always``, the engine as it is) against leaving the scan as it is
+(``never``) on two layouts of the same embeddings:
 
 - NARROW (1 parquet file — this repo's testdata shape, and the shape
-  of any small-dimension scan at cluster scale): the engine should
-  repartition, so it should time like ``always``.
+  of any small-dimension scan at cluster scale): the repartition is
+  what keeps the folds off a single core.
 - WIDE (32 parquet files — a stand-in for the tens of thousands of
-  splits a 100 TB table scan has): the engine should leave the scan
-  alone, so it should time like ``never``.
+  splits a 100 TB table scan has): the repartition is an extra
+  shuffle of raw rows; ``never`` over ``always`` shows what it costs.
 
 Ops: knn_join (64-d sqeuclidean + cosine, q45/q35-style), knn_join
 2-d (q23-style) and ann_lsh_join (8x64 hyperplane fold, q40-style).
-The forced variants substitute ``spread`` in this process only, at
+``never`` substitutes ``spread`` with a no-op in this process only, at
 every loaded engine module that binds it; the engine itself has no
 setting for it. Variants are interleaved per repetition, each
 repetition starting from the next variant, and the best of ``RUNS``
-is kept, so host drift and run order hit all three alike. Each cell
-also records which forced variant's optimized plan the engine's plan
-equals (expression ids aside): the timing gap to that variant is then
-measurement noise plus the decision's probe.
+is kept, so host drift and run order hit both alike.
 
 Usage: python tools/spread_stress.py [out_json] [data_dir]
 
@@ -37,7 +32,6 @@ from __future__ import annotations
 import contextlib
 import json
 import os
-import re
 import sys
 import time
 
@@ -49,7 +43,7 @@ DIM = 64
 SIZES = {"s20k": 20_000, "s100k": 100_000}
 N_PROBES = 20
 RUNS = 3
-VARIANTS = ("engine", "always", "never")
+VARIANTS = ("always", "never")
 
 
 def gen_embeddings(spark, n: int, path_narrow: str, path_wide: str) -> None:
@@ -67,27 +61,21 @@ def gen_embeddings(spark, n: int, path_narrow: str, path_wide: str) -> None:
 
 @contextlib.contextmanager
 def forced_spread(variant: str):
-    """Substitute ``spread`` with a forced repartition (``always``) or
-    a no-op (``never``) at every loaded module that binds it."""
+    """``always`` runs the engine's spread; ``never`` substitutes a
+    no-op at every loaded module that binds it."""
     import model_presto_spark.io as io
 
     engine = io.spread
-    if variant == "engine":
+    if variant == "always":
         yield
         return
-    if variant == "always":
-        def forced(df):
-            return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    else:
-        def forced(df):
-            return df
     bound = [
         m for name, m in list(sys.modules.items())
         if name.startswith("model_presto_spark")
         and getattr(m, "spread", None) is engine
     ]
     for m in bound:
-        m.spread = forced
+        m.spread = lambda df: df
     try:
         yield
     finally:
@@ -96,7 +84,7 @@ def forced_spread(variant: str):
 
 
 def main() -> None:
-    out_json = sys.argv[1] if len(sys.argv) > 1 else "STRESS_r16.json"
+    out_json = sys.argv[1] if len(sys.argv) > 1 else "STRESS_r17.json"
     data_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/spread_stress"
 
     from model_presto_spark.operators.knn import ann_lsh_join, knn_join
@@ -136,13 +124,8 @@ def main() -> None:
             raise ValueError(op)
         return out
 
-    def plan(op: str, path: str) -> str:
-        text = build_op(op, path)._jdf.queryExecution().optimizedPlan().toString()
-        return re.sub(r"#\d+L?", "#", text)
-
     ops = ["knn64_sqeuclidean", "knn64_cosine", "knn2", "ann_lsh"]
     t: dict[str, float] = {}
-    same_plan: dict[str, list[str]] = {}
     for tag in SIZES:
         for layout, path in layouts[tag].items():
             for op in ops:
@@ -150,13 +133,6 @@ def main() -> None:
                 # genuine O(n^2/2^planes) rerank — cap ann at 20k
                 if op == "ann_lsh" and tag != "s20k":
                     continue
-                plans = {}
-                for variant in VARIANTS:
-                    with forced_spread(variant):
-                        plans[variant] = plan(op, path)
-                same_plan[f"{tag}.{layout}.{op}"] = [
-                    v for v in VARIANTS[1:] if plans[v] == plans["engine"]
-                ]
                 for r in range(RUNS):
                     k = r % len(VARIANTS)
                     for variant in VARIANTS[k:] + VARIANTS[:k]:
@@ -171,10 +147,7 @@ def main() -> None:
                         print(key, round(dt, 3), flush=True)
 
     cells = sorted({k.rsplit(".", 1)[0] for k in t})
-    ratio = {
-        c: round(t[c + ".engine"] / min(t[c + ".always"], t[c + ".never"]), 3)
-        for c in cells
-    }
+    ratio = {c: round(t[c + ".never"] / t[c + ".always"], 3) for c in cells}
     results = {
         "sizes": SIZES,
         "dim": DIM,
@@ -182,10 +155,7 @@ def main() -> None:
         "runs": RUNS,
         "cores": spark.sparkContext.defaultParallelism,
         "timings_best_of_runs": t,
-        "ratio_engine_over_faster_forced": ratio,
-        "engine_plan_equals": same_plan,
-        "cells_within_10pct": sum(r <= 1.10 for r in ratio.values()),
-        "cells": len(ratio),
+        "ratio_never_over_always": ratio,
     }
     with open(out_json, "w") as f:
         json.dump(results, f, indent=1)
